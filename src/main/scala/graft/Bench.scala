@@ -60,6 +60,10 @@ object Bench {
     *     measured away). Accepted pins always record their own probe
     *     pairs as the next band.
     *
+    *  0. failed queries (checked first, `force` included): a run where
+    *     any query failed every repeat measured less than the whole
+    *     surface, so it never pins → BENCH_LOCAL_invalid.json.
+    *
     * Returns (fileName, optional stderr note).
     */
   def ledgerFor(sfNum: String, spreadBp: Long, total: Double,
@@ -68,7 +72,8 @@ object Bench {
                 calibMs: Option[Long] = None,
                 pinnedCalibMs: Option[Long] = None,
                 calibMemMs: Option[Long] = None,
-                pinnedCalibMemMs: Option[Long] = None)
+                pinnedCalibMemMs: Option[Long] = None,
+                failed: Seq[String] = Nil)
       : (String, Option[String]) = {
     // calibration dimensions with both sides measured (CPU fold, then the
     // memory/shuffle-bandwidth probe — the dimension the r11 forensics
@@ -80,7 +85,11 @@ object Bench {
     }
     val outOfBand = compared.find {
       case (_, c, p) => c > CalibTolerance * p }
-    if (sfNum != "0.1") (s"BENCH_LOCAL_sf$sfNum.json", None)
+    if (failed.nonEmpty)
+      ("BENCH_LOCAL_invalid.json", Some(
+        s"INVALID run: ${failed.mkString(",")} failed every run; a run " +
+          "with failures never pins — diverted to BENCH_LOCAL_invalid.json"))
+    else if (sfNum != "0.1") (s"BENCH_LOCAL_sf$sfNum.json", None)
     else if (spreadBp > 3000)
       ("BENCH_LOCAL_noisy.json", Some(
         s"spread_bp=$spreadBp > 3000: noisy run diverted to " +
@@ -118,6 +127,15 @@ object Bench {
             "SPARK_GRAFT_BENCH_FORCE=1 to re-pin deliberately"
       }))
     else ("BENCH_LOCAL.json", None)
+  }
+
+  /** Headline total over per-query medians — pure, spec'd
+    * (BenchTotalSpec). A query whose runs ALL failed carries the -1.0
+    * sentinel median; it is left out of the sum and named in the second
+    * element (sorted), so a crash can never make the total smaller. */
+  def totalOf(results: Map[String, Double]): (Double, Seq[String]) = {
+    val (failed, ok) = results.partition(_._2 < 0.0)
+    (ok.values.sum, failed.keys.toSeq.sorted)
   }
 
   /** The pinned ledger's total, parsed ANCHORED to the metric field —
@@ -230,32 +248,6 @@ object Bench {
     (1 to math.max(1, rounds)).map(_ => once()).min
   }
 
-  /** Shuffle-file-write calibration probe — the third candidate phase
-    * dimension (BASELINE §4.0e closing observation): the day's slowest
-    * passes carried the FASTEST CPU probes and in-band memory probes,
-    * with inflation concentrated in the checkpoint/shuffle-WRITE-heavy
-    * tier — so the remaining suspect is disk/page-cache write
-    * throughput, which neither earlier probe touches (the mem probe's
-    * partial agg shuffles only ~2M rows). This one round-trips a full
-    * ~1.2 GB shuffle: every range row is written to shuffle files and
-    * read back (hash repartition on a value-derived key prevents any
-    * coalesce short-circuit), so its wall time tracks the shuffle-file
-    * write+read path the heavy tier lives on. Same min-of-rounds
-    * policy. */
-  def calibProbeIo(spark: SparkSession, rounds: Int = 3): Long = {
-    import org.apache.spark.sql.functions._
-    val p = spark.sparkContext.defaultParallelism
-    def once(): Long = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 150000000L, 1L, p)
-        .repartition(p * 2, col("id") % 997L)
-        .select(max(col("id"))).head()
-      (System.nanoTime() - t0) / 1000000L
-    }
-    once()
-    (1 to math.max(1, rounds)).map(_ => once()).min
-  }
-
   /** Consecutive slow-phase diverts already recorded in the noisy ledger
     * AGAINST THE SAME PIN — pure, spec'd (BenchLedgerSpec). ADVICE r9:
     * the slow-phase gate diverts ANY worse-than-pin total, so a genuine
@@ -348,9 +340,7 @@ object Bench {
     if (sys.env.getOrElse("SPARK_GRAFT_CALIB_ONLY", "0") == "1") {
       val c = Bench.calibProbe(spark)
       val m = Bench.calibProbeMem(spark)
-      val io = Bench.calibProbeIo(spark)
-      println(s"""{"metric":"calib","value":$c,"mem_ms":$m,""" +
-        s""""io_ms":$io,"unit":"ms"}""")
+      println(s"""{"metric":"calib","value":$c,"mem_ms":$m,"unit":"ms"}""")
       spark.stop()
       return
     }
@@ -416,7 +406,8 @@ object Bench {
     // the min→max band so the variance is visible in the artifact itself.
     // A crashed run records -1.0, never a plausible elapsed time; a
     // query's value is the median of its successful runs (-1.0 only if
-    // every run failed).
+    // every run failed — then it is left out of the total, named in
+    // `failed`, and the run never pins: see totalOf and ledgerFor).
     val repeats = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt)
     // Steady-state priming (round 8): each query runs ONCE untimed at the
@@ -513,7 +504,10 @@ object Bench {
     val results = runs.map { case (k, v) => k -> median(v) }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val (total, failed) = Bench.totalOf(results)
+    if (failed.nonEmpty) System.err.println(
+      "[bench] INVALID: failed every run, left out of the total: " +
+        failed.mkString(","))
     val okRuns = runs.values.map(_.filter(_ >= 0.0)).filter(_.nonEmpty)
     val totalMin = okRuns.map(_.min).sum
     val totalMax = okRuns.map(_.max).sum
@@ -537,6 +531,7 @@ object Bench {
     // parsePinnedCalib), so straddlers divert too
     val calibAfter = if (calibOn) Bench.calibProbe(spark) else -1L
     val calibMemAfter = if (calibOn) Bench.calibProbeMem(spark) else -1L
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val calibJson = s"[$calibBefore,$calibAfter]"
     val calibMemJson = s"[$calibMemBefore,$calibMemAfter]"
     val fullLine =
@@ -544,7 +539,7 @@ object Bench {
         s""""repeats":$repeats,"total_min":$totalMin,"total_max":$totalMax,""" +
         s""""spread_bp":$spreadBp,"calib_ms":$calibJson,""" +
         s""""calib_mem_ms":$calibMemJson,"n_extra":$nExtraJson,""" +
-        s""""runs":$runsJson,"sf":"$sfDir"}"""
+        s""""runs":$runsJson,"failed":$failedJson,"sf":"$sfDir"}"""
     val sfNum = Bench.parseSf(sfDir)
     // Full-precision, full-name per-query map → a repo file (the ledger's
     // source of truth; survives any stdout truncation). Which file gets
@@ -600,7 +595,7 @@ object Bench {
       val force = sys.env.getOrElse("SPARK_GRAFT_BENCH_FORCE", "0") == "1"
       val (ledger, note) = Bench.ledgerFor(
         sfNum, spreadBp, total, pinnedTotal, force, calibWorst, pinnedCalib,
-        calibMemWorst, pinnedCalibMem)
+        calibMemWorst, pinnedCalibMem, failed)
       note.foreach(n => System.err.println(s"[bench] $n"))
       // slow-phase diverts carry a consecutive-divert counter in the
       // written line (see Bench.slowDivertCount) — 3 in a row against

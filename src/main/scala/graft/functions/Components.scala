@@ -48,12 +48,15 @@ import scala.collection.mutable
   * as [[propagationLoop]] for non-long id types; the contraction path is
   * strictly better whenever ids are integral, which every fixture and
   * every doc_id-keyed corpus satisfies.
+  *
+  * The one-task edge budget ([[LocalEdgeThreshold]]) is shared with
+  * [[KCore]], whose k-core peel uses the same sized base case.
   */
 object Components {
 
   /** Edges (as (s, t) long pairs) that fit one task's memory — the exact
     * union-find base case. 4M edges ≈ 64 MB of longs plus map overhead. */
-  private val LocalEdgeThreshold = 4000000L
+  private[graft] val LocalEdgeThreshold = 4000000L
 
   /** Per-level shuffle sizing: partitions of ~half the local threshold
     * (~2M edges at the default) keep tasks meaty at any scale (pair

@@ -164,4 +164,30 @@ class CheckpointsSpec extends SparkSpec {
       s"components pinned ${persistedIds.size} frames")
     sweep()
   }
+
+  test("q202 peels in one task: a handful of jobs, one pinned frame") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    sweep()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      // build to action: the peel's eager pair job counts too
+      val rows = graft.SparkEntry.queries("q202_kcore_peel")(
+        spark, sfDir.replace("sf0.001", "sf0.01")).collect()
+      org.apache.spark.ListenerBusDrain(sc)
+      assert(rows.nonEmpty)
+      // the distributed rounds ran ~4 jobs per lineage cut (8 cuts)
+      assert(jobs.get <= 6, s"q202 started ${jobs.get} jobs")
+    } finally sc.removeSparkListener(listener)
+    // only the pair list's checkpoint, which the returned plan reads
+    assert(persistedIds.size <= 1,
+      s"q202 pinned ${persistedIds.size} frames")
+    sweep()
+  }
 }
