@@ -137,9 +137,7 @@ object Tables {
       val path = s"$sfDir/events.parquet"
       // cache key carries the path's mtime so a fixture regenerated
       // in-place with the OTHER ts encoding is re-probed, not read with a
-      // stale schema (LongType nanos as TimestampType or vice versa);
-      // clearTsEncodingCache() is the hook for harnesses that rewrite
-      // fixtures without touching the top-level mtime
+      // stale schema (LongType nanos as TimestampType or vice versa)
       val nanosOnDisk = tsEncodingCache.getOrElseUpdate(
         (path, new java.io.File(path).lastModified()),
         spark.read.parquet(path)
@@ -157,9 +155,6 @@ object Tables {
   }
   private val tsEncodingCache =
     scala.collection.concurrent.TrieMap.empty[(String, Long), Boolean]
-  /** Drop cached ts-encoding probes (for harnesses that rewrite a fixture
-    * dir in-place within one JVM without changing its mtime). */
-  def clearTsEncodingCache(): Unit = tsEncodingCache.clear()
   def documents(spark: SparkSession, sfDir: String): DataFrame =
     read(spark, sfDir, "documents", documentsSchema)
   def embeddings(spark: SparkSession, sfDir: String): DataFrame =

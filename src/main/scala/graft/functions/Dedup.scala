@@ -204,10 +204,8 @@ object Dedup {
         gramIds(col(textCol), n).as("g")),
       threshold)
 
-  /** [[ngramNearDups]] over a pre-interned `(block, id, g)` frame — the
-    * entry point for callers holding a shared gram materialization
-    * ([[TextCache.gramIds]]), so the shingle build is not recomputed per
-    * query.
+  /** [[ngramNearDups]] over a pre-interned `(block, id, g)` frame, with
+    * `g` the sorted distinct shingle ids [[gramIds]] emits.
     */
   def ngramNearDupsFromIds(g: DataFrame, threshold: Double): DataFrame = {
     // Exact prefix filter (Bayardo/Ma/Srikant, "Scaling up all pairs

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 object CorpusQueries {
 
   /** The q94 cluster assignment (LSH pairs → connected components),
-    * computed ONCE per (session, sf dir) and memoized via
+    * computed ONCE per (session, sf dir, corpus content) and memoized via
     * [[graft.functions.TextCache.form]]: q100/q108/q109 all start from this
     * exact frame, and the LSH+verify+CC pass is the most expensive
     * derivation in the engine while its output is a few thousand

@@ -176,28 +176,16 @@ object Hierarchy {
       val lifted = pJump
         .join(a.select(col("descd").as("mid"), col("anc")), "mid")
         .select(col("descd"), col("anc"))
-      // p2 and lifted are mutually independent (both read pJump + already-
-      // materialized frames), so their materializations OVERLAP (guide
-      // §2.6: concurrent jobs back-fill each other's straggler tails) —
-      // serially they were the round's two dominant wall segments. On a
-      // parent CYCLE the lifted block materializes concurrently before
-      // the plateau check fires; it is discarded with the exception (the
-      // closure is never returned), so the fail-fast contract — no
-      // wrapped pair ever reaches a RETURNED frame — is unchanged.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fP = Future(Checkpoints.cutCounted(p2))
-      val fLifted = Future(Checkpoints.cut(lifted))
-      val (pCp, pNext) = Await.result(fP, Duration.Inf)
-      val liftedCp = Await.result(fLifted, Duration.Inf)
+      val (pCp, pNext) = Checkpoints.cutCounted(p2)
       p = pCp
       // acyclic input ⇒ |P| strictly shrinks while nonempty (see scaladoc);
-      // a plateau is a parent cycle — fail before unioning wrapped pairs
+      // a plateau is a parent cycle — fail before the lifted block of
+      // wrapped pairs is ever materialized
       if (pNext >= pSize)
         throw new IllegalArgumentException(
           s"ancestorClosure: parent cycle detected (2^$iter-step pointer " +
             s"count $pSize -> $pNext did not shrink); input must be acyclic")
+      val liftedCp = Checkpoints.cut(lifted)
       parts = liftedCp :: parts
       Checkpoints.release(prevP)
       pSize = pNext

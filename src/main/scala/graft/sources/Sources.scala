@@ -108,7 +108,10 @@ object Sources {
     * dir first (fully materializing `df` while the original is still
     * intact), then swaps with the same checked park/promote discipline as
     * [[compactParquet]] — an abort leaves the data whole in exactly one of
-    * the two named locations, and the next call self-heals.
+    * the two named locations, and the next call self-heals. The swap
+    * bypasses Spark's own overwrite bookkeeping, so the path's entries in
+    * the shared Dataset cache are refreshed explicitly: a frame persisted
+    * over the old table would otherwise keep serving its rows.
     */
   def replaceParquet(spark: SparkSession, df: DataFrame, path: String)
   : DataFrame = {
@@ -131,6 +134,7 @@ object Sources {
     if (fs.exists(hPath)) step(fs.rename(hPath, old), s"park of $path")
     step(fs.rename(staging, hPath), s"promote of $staging")
     fs.delete(old, true) // best-effort; next call clears a leftover
+    spark.catalog.refreshByPath(path)
     spark.read.parquet(path)
   }
 

@@ -1,82 +1,64 @@
 package graft.functions
 
 import graft.{SparkSpec, Tables}
+import graft.operators.CorpusQueries
+import graft.sources.Sources
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class TextCacheSpec extends SparkSpec {
 
-  test("cached forms equal their uncached derivations (values, not plans)") {
-    val base = TextCache.base(spark, sfDir)
-    assert(base.orderBy("doc_id").collect().toSeq ==
-      Tables.documents(spark, sfDir).orderBy("doc_id").collect().toSeq)
-    val tok = TextCache.tokenIds(spark, sfDir)
-    val tokFresh = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"), Dedup.tokenIds(col("text")).as("tok"))
-    assert(tok.orderBy("doc_id").collect().toSeq ==
-      tokFresh.orderBy("doc_id").collect().toSeq)
-    val g = TextCache.gramIds(spark, sfDir, 3)
-    val gFresh = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"), Dedup.gramIds(col("text"), 3).as("g"))
-    assert(g.orderBy("doc_id").collect().toSeq ==
-      gFresh.orderBy("doc_id").collect().toSeq)
+  // Each test uses its own spark.newSession() so release never touches
+  // artifacts another spec holds in the shared session. `counted` is a
+  // form build that records each time it runs.
+  private def counted(s: SparkSession,
+                      builds: java.util.concurrent.atomic.AtomicInteger,
+                      n: Long): DataFrame = {
+    builds.incrementAndGet()
+    s.range(n).selectExpr("id", "id * id AS sq")
   }
 
   test("forms are memoized per (session, sfDir): same frame comes back") {
-    assert(TextCache.base(spark, sfDir) eq TextCache.base(spark, sfDir))
-    assert(TextCache.tokenIds(spark, sfDir) eq TextCache.tokenIds(spark, sfDir))
-    assert(TextCache.gramIds(spark, sfDir, 3) eq
-      TextCache.gramIds(spark, sfDir, 3))
-    // different n is a different form
-    assert(!(TextCache.gramIds(spark, sfDir, 3) eq
-      TextCache.gramIds(spark, sfDir, 2)))
+    val s = spark.newSession()
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val a = TextCache.form(s, sfDir, "spec-memo")(counted(s, builds, 5))
+    assert(TextCache.form(s, sfDir, "spec-memo")(counted(s, builds, 5)) eq a)
+    assert(builds.get() == 1)
+    // a different name is a different form
+    assert(!(TextCache.form(s, sfDir, "spec-memo2")(
+      counted(s, builds, 5)) eq a))
+    assert(builds.get() == 2)
+    TextCache.release(s)
   }
 
   test("forms are file-backed artifacts: sweep-immune, released on demand") {
-    val tok = TextCache.tokenIds(spark, sfDir)
-    val n = tok.count()
-    assert(n > 0)
+    val s = spark.newSession()
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val f = TextCache.form(s, sfDir, "spec-file")(counted(s, builds, 9))
+    assert(f.count() == 9)
     // materialization must NOT depend on session cache state: a harness
     // sweep between queries (Checkpoints.sweep clears the plan cache and
     // every persistent RDD) leaves the artifact read path untouched —
     // the exact failure mode that cost q100 a 10x regression when the
     // forms were persist()-backed
-    graft.functions.Checkpoints.sweep(spark)
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
-    assert(TextCache.tokenIds(spark, sfDir).count() == n)
+    Checkpoints.sweep(s)
+    assert(s.sparkContext.getPersistentRDDs.isEmpty)
+    assert(TextCache.form(s, sfDir, "spec-file")(
+      counted(s, builds, 9)).count() == 9)
+    assert(builds.get() == 1)
     // the memoized reader scans parquet files, not an in-memory relation
-    val files = tok.inputFiles
+    val files = f.inputFiles
     assert(files.nonEmpty && files.forall(_.contains("graft-textcache")),
       s"expected materialized textcache files, got ${files.take(2).toSeq}")
-    // base is deliberately NOT materialized: the source is already a
-    // parquet scan, so a copy would buy nothing (review finding)
-    assert(TextCache.base(spark, sfDir).inputFiles
-      .forall(!_.contains("graft-textcache")))
-    TextCache.release(spark)
+    TextCache.release(s)
     // files are gone after release...
     assert(!new java.io.File(new java.net.URI(files.head).getPath).exists())
     // ...and the form rebuilds transparently on next access
-    assert(TextCache.tokenIds(spark, sfDir).count() == n)
-    TextCache.release(spark)
-  }
-
-  test("shared tier: two sessions, ONE build (fingerprint-keyed artifact " +
-    "reused across sessions)") {
-    val shared = java.nio.file.Files
-      .createTempDirectory("graft-sharedtest-").toString
-    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
-    def mk(s: org.apache.spark.sql.SparkSession) = {
-      builds.incrementAndGet()
-      s.range(5).selectExpr("id", "id * id AS sq")
-    }
-    val s1 = spark.newSession(); val s2 = spark.newSession()
-    Seq(s1, s2).foreach(_.conf.set(TextCache.SharedDirConfKey, shared))
-    val a = TextCache.form(s1, sfDir, "spec-shared-a")(mk(s1))
-    assert(builds.get() == 1)
-    assert(a.inputFiles.forall(_.contains("graft-textcache-shared")))
-    // the SECOND SESSION reads the completed artifact — no rebuild
-    val b = TextCache.form(s2, sfDir, "spec-shared-a")(mk(s2))
-    assert(builds.get() == 1, "second session rebuilt a shared artifact")
-    assert(b.orderBy("id").collect().toSeq == a.orderBy("id").collect().toSeq)
+    assert(TextCache.form(s, sfDir, "spec-file")(
+      counted(s, builds, 9)).count() == 9)
+    assert(builds.get() == 2)
+    TextCache.release(s)
   }
 
   test("shared tier: the corpus fingerprint tracks content — a changed " +
@@ -92,88 +74,51 @@ class TextCacheSpec extends SparkSpec {
     assert(fp2 == TextCache.corpusFingerprint(spark, dir.toString))
   }
 
-  test("shared tier gc: stale fingerprint subdirs and crashed-builder " +
-    "debris are evicted while a concurrent reader of the live artifact " +
-    "is unaffected") {
-    val shared = java.nio.file.Files
-      .createTempDirectory("graft-sharedtest-").toString
-    val s = spark.newSession()
-    s.conf.set(TextCache.SharedDirConfKey, shared)
-    // live artifact, with a reader handed out BEFORE the gc runs
-    val live = TextCache.form(s, sfDir, "spec-gc-live")(
-      s.range(7).selectExpr("id", "id + 1 AS nxt"))
-    assert(live.count() == 7)
-    val root = new java.io.File(s"$shared/graft-textcache-shared")
-    val fpLive = TextCache.corpusFingerprint(s, sfDir)
-    // two stale fingerprints (older/newer), plus crashed-builder debris
-    // inside the LIVE fingerprint dir
-    val staleOld = new java.io.File(root, "deadbeef00000001")
-    val staleNew = new java.io.File(root, "deadbeef00000002")
-    Seq(staleOld, staleNew).foreach { d =>
-      assert(d.mkdirs()); java.nio.file.Files.writeString(
-        d.toPath.resolve("x-v1.marker"), "stale")
+  test("a table rewritten in the session re-keys cc94: q100 after a " +
+    "refresh equals a fresh session's, one artifact left on disk") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stale-")
+    java.nio.file.Files.list(java.nio.file.Paths.get(sfDir)).forEach { src =>
+      val dst = dir.resolve(src.getFileName)
+      java.nio.file.Files.copy(src, dst)
+      dst.toFile.setWritable(true)
     }
-    assert(staleOld.setLastModified(System.currentTimeMillis() - 7200000))
-    val liveDir = new java.io.File(root, fpLive)
-    val crashedTmp = new java.io.File(liveDir, ".build-spec-gc-dead-v1-xyz")
-    assert(crashedTmp.mkdirs())
-    val orphanLock = new java.io.File(liveDir, "spec-gc-dead-v1.lock")
-    assert(orphanLock.createNewFile())
-    // keepN=1 with age protections OFF (maxAgeMs for stale dirs,
-    // debrisAgeMs for live-looking locks/temps — forced, tests only):
-    // the older stale dir must go, the newer stale dir stays, the live
-    // dir is protected regardless
-    val deleted1 = TextCache.gc(s, shared, keepN = 1, maxAgeMs = -1,
-      protectSfDirs = Seq(sfDir), debrisAgeMs = -1)
-    assert(deleted1.exists(_.endsWith(staleOld.getName)))
-    assert(!staleOld.exists() && staleNew.exists() && liveDir.exists())
-    // debris in the live dir went with the same pass
-    assert(!crashedTmp.exists() && !orphanLock.exists())
-    // keepN=0 evicts the remaining stale dir; live still protected
-    TextCache.gc(s, shared, keepN = 0, maxAgeMs = -1,
-      protectSfDirs = Seq(sfDir))
-    assert(!staleNew.exists() && liveDir.exists())
-    // the pre-gc reader still reads the live artifact, untouched
-    assert(live.count() == 7)
-    // age protection: a young stale dir survives keepN=0 under the
-    // default in-flight-build guard
-    val young = new java.io.File(root, "deadbeef00000003")
-    assert(young.mkdirs())
-    TextCache.gc(s, shared, keepN = 0, protectSfDirs = Seq(sfDir))
-    assert(young.exists())
-    // debris protection is a SEPARATE age: a forced stale-dir sweep
-    // (maxAgeMs=-1) must NOT take the lock of a build running right now
-    val liveLock = new java.io.File(liveDir, "spec-gc-live2-v1.lock")
-    assert(liveLock.createNewFile())
-    TextCache.gc(s, shared, keepN = 0, maxAgeMs = -1,
-      protectSfDirs = Seq(sfDir))
-    assert(liveLock.exists(), "gc swept a fresh (live-build) lock")
-  }
-
-  test("shared tier: a held lock falls back to a session-local build " +
-    "after the wait (correct result, loud note, no indefinite wait)") {
-    val shared = java.nio.file.Files
-      .createTempDirectory("graft-sharedtest-").toString
+    val corpus = dir.toString
     val s = spark.newSession()
-    s.conf.set(TextCache.SharedDirConfKey, shared)
-    s.conf.set(TextCache.SharedWaitMsKey, "1")
-    // strand a lock where the builder would take it (layout: see
-    // SharedDirConfKey scaladoc; -v1 = current FormLayoutVersion)
-    val fp = TextCache.corpusFingerprint(s, sfDir)
-    val lock = new java.io.File(
-      s"$shared/graft-textcache-shared/$fp/spec-shared-b-v1.lock")
-    lock.getParentFile.mkdirs()
-    assert(lock.createNewFile())
-    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
-    val df = TextCache.form(s, sfDir, "spec-shared-b") {
-      builds.incrementAndGet()
-      s.range(3).selectExpr("id")
-    }
-    assert(builds.get() == 1, "fallback build did not run")
-    assert(df.count() == 3)
-    // the fallback landed session-local, NOT in the shared layout
-    assert(df.inputFiles.forall(!_.contains("graft-textcache-shared")))
-    assert(!new java.io.File(
-      s"$shared/graft-textcache-shared/$fp/spec-shared-b-v1").exists())
+    val first = CorpusQueries.q100_dedup_components(s, corpus)
+      .collect().toSeq
+    assert(first.nonEmpty)
+    // the refresh: append a verbatim copy of a clustered document under a
+    // new doc_id, swapped in the way PortalSync.refresh does
+    val docsPath = s"$corpus/documents.parquet"
+    val docs = s.read.schema(Tables.documentsSchema).parquet(docsPath)
+    val newId = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
+    val copy = docs.filter(col("doc_id") === first.head.getLong(0))
+      .withColumn("doc_id", lit(newId))
+    Sources.replaceParquet(s, docs.unionByName(copy), docsPath)
+    val second = CorpusQueries.q100_dedup_components(s, corpus)
+      .collect().toSeq
+    val fresh = spark.newSession()
+    val expected = CorpusQueries.q100_dedup_components(fresh, corpus)
+      .collect().toSeq
+    val matchesFresh = second == expected
+    assert(matchesFresh, "same-session q100 served a stale cc94")
+    val changed = second != first
+    assert(changed, "the refresh did not change q100")
+    assert(second.exists(_.getLong(0) == newId))
+    // the superseded artifact was deleted with the re-key
+    val artifact = new java.io.File(new java.net.URI(
+      CorpusQueries.q100_dedup_components(s, corpus).inputFiles.head)
+      .getPath)
+    val root = Iterator.iterate(artifact)(_.getParentFile)
+      .takeWhile(_ != null)
+      .find(_.getName.startsWith("graft-textcache-")).get
+    val cc94 = java.nio.file.Files.walk(root.toPath).iterator().asScala
+      .filter(p => p.toFile.isDirectory &&
+        p.getFileName.toString.startsWith("cc94"))
+      .toSeq
+    assert(cc94.size == 1, s"expected one cc94 artifact, got $cc94")
+    TextCache.release(s)
+    TextCache.release(fresh)
+    org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 }
