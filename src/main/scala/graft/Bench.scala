@@ -283,6 +283,37 @@ object Bench {
     ok.size >= 2 && ok.max > maxRatio * ok.min
   }
 
+  /** The [[needsExtraRepeat]] ratio and the cap on extra repeats per
+    * query: a band wider than 3× earns up to 2 more runs, so the median
+    * sits on 4-5 samples instead of 3. */
+  val OutlierRatio = 3.0
+  val MaxExtraRepeats = 2
+
+  /** Bench's additions to [[GraftSession.harnessConfs]]; PlanDump uses
+    * the same, so a dumped plan is the plan the bench times.
+    *
+    * Session-age guard (round 10): with -Xms32g the driver's old gen
+    * almost never fills, so full GCs almost never run — and
+    * ContextCleaner only reclaims shuffle files/broadcasts when their
+    * references are GC'd. Over a long pass the dead shuffle files
+    * accumulate on disk, evict the page cache, and shuffle-heavy queries
+    * degrade in-session (q91 25→43 s at sf1 vs 3-4 s standalone —
+    * BASELINE §4.0b). Spark's own remedy is periodic forced GC on the
+    * cleaner thread; the default interval is 30 min — longer than the
+    * whole pass. 90 s keeps cleanup continuous at sf1 while a ≤60 s sf0.1
+    * pass sees at most one.
+    *
+    * Scans split at 8 MiB, not the 128 MiB default: the fixtures are
+    * single ~1-115 MiB parquet files, so default sizing reads a whole
+    * table in ONE task at sf1 (113 MiB lineitem) however many cores the
+    * host has. ≤ sf0.1 the files are single-row-group ≤12 MiB, so pinned
+    * sf0.1 ledgers are unaffected (splits without a row-group midpoint
+    * read nothing).
+    */
+  val SessionConfs: Seq[(String, String)] = Seq(
+    "spark.cleaner.periodicGC.interval" -> "90s",
+    "spark.sql.files.maxPartitionBytes" -> (8L * 1024 * 1024).toString)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -296,34 +327,7 @@ object Bench {
     // contract is one fixed config; cluster numbers are a different
     // population).
     val masterEnv = sys.env.get("SPARK_GRAFT_MASTER")
-    val builder = SparkSession.builder()
-      .master(masterEnv.getOrElse(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Session-age guard (round 10, VERDICT item 3): with -Xms32g the
-      // driver's old gen almost never fills, so full GCs almost never
-      // run — and ContextCleaner only reclaims shuffle files/broadcasts
-      // when their references are GC'd. Over a long pass the dead
-      // shuffle files accumulate on disk, evict the page cache, and
-      // shuffle-heavy queries degrade in-session (q91 25→43 s at sf1
-      // vs 3-4 s standalone — BASELINE §4.0b). Spark's own remedy is
-      // periodic forced GC on the cleaner thread; the default interval
-      // is 30 min — longer than the whole pass. 90 s keeps cleanup
-      // continuous at sf1 while a ≤60 s sf0.1 pass sees at most one.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "90s"))
-      // Split scans at 8 MiB, not the 128 MiB default: the fixtures are
-      // single ~1-115 MiB parquet files, so default sizing reads a whole
-      // table in ONE task at sf1 (113 MiB lineitem) however many cores
-      // the host has — the documented maxPartitionBytes-vs-fixture knob.
-      // ≤ sf0.1 the files are single-row-group ≤12 MiB, so pinned sf0.1
-      // ledgers are unaffected (splits without a row-group midpoint read
-      // nothing).
-      .config("spark.sql.files.maxPartitionBytes", s"${8L * 1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-    ClusterProfile.configure(builder)
-    val spark = builder.getOrCreate()
-    ClusterProfile.installCheckpoints(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness(SessionConfs: _*)
     // Phase calibration (round 11, VERDICT item 2): time the fixed probe
     // BEFORE the warm-up and AFTER the timed pass; both land in every
     // output line as the run's measured phase label. CALIB_ONLY=1 runs
@@ -364,40 +368,19 @@ object Bench {
     // NOTE: this warm-every-query methodology started in round 3 — r01/r02
     // ledger numbers were taken under a single-query warm-up and include
     // per-query JIT (see BASELINE.md ledger).
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
+    val warmDir =
       new java.io.File(sfDir).getParentFile match {
         case null => "/root/testdata/sf0.001"
         case p => new java.io.File(p, "sf0.001").getPath
-      })
-    // Bisect knobs (round 10, dev-only; the driver sets neither):
-    // SPARK_GRAFT_BENCH_ONLY=q91_x,q20_y restricts the TIMED set;
-    // SPARK_GRAFT_BENCH_WARM_ONLY=1 restricts the sf0.001 JIT warm-up to
-    // the same set (default: warm everything, like a full pass). Together
-    // they isolate whether an in-pass artifact comes from the warm-up
-    // state (plans/broadcasts of 210 queries) or from the timed
-    // predecessors.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val warmOnly =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_ONLY", "0") == "1"
-    val timedQueries = SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val warmQueries = if (warmOnly) timedQueries else SparkEntry.queries
+      }
     if (new java.io.File(warmDir).isDirectory)
-      warmQueries.values.foreach { fn =>
+      SparkEntry.queries.values.foreach { fn =>
         try fn(spark, warmDir).count() catch { case _: Throwable => () }
         sweep()
       }
     else
       try SparkEntry.queries.get("q20_agg_hash").foreach(_(spark, sfDir).count())
       catch { case _: Throwable => () }
-    // Post-warm-up settle (round-10 bisect): warming 210 queries floods
-    // the C2 compile queue with thousands of methods; the first
-    // compute-dense timed query then runs its hot generated code at
-    // interpreter/C1 tier until C2 drains — a stochastic 6-10×
-    // first-runs artifact (q91 at sf1). An optional settle pause lets
-    // the queue drain before timing starts.
-    sys.env.get("SPARK_GRAFT_BENCH_WARM_SETTLE_MS").map(_.toLong)
-      .filter(_ > 0).foreach(Thread.sleep)
     // Median-of-N timing (round 6, default 3): a single-shot run lands
     // anywhere in the ±20% I/O-variance band (BASELINE.md item 16) and
     // every round needed sentinel-query forensics to interpret it; the
@@ -419,62 +402,16 @@ object Bench {
     // under spread_bp no matter how quiet the machine is. With priming,
     // every timed run measures steady state and the spread field reports
     // actual run-to-run variance — the thing it exists to report.
-    // SPARK_GRAFT_BENCH_PRIME=0 restores the unprimed (cold-first) shape.
-    val prime =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIME", "1") != "0"
-    // Outlier-triggered extra repeats (round 9): a query whose repeat
-    // band is wider than OUTLIER_RATIO earns up to maxExtra more runs —
-    // the median then sits on 4-5 samples instead of 3, and `n_extra` in
-    // the artifact marks which values carry spike evidence (the
-    // self-interpreting-artifact fix: a reader distinguishes a host phase
-    // spike, n_extra>0 with a quiet median, from a plan regression,
-    // uniformly slow runs with n_extra=0 or a slow median despite extras).
-    val outlierRatio = sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_OUTLIER_RATIO", "3.0").toDouble
-    val maxExtra = math.max(0,
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_EXTRA", "2").toInt)
-    // SPARK_GRAFT_BENCH_DIAG=1: append one JSON line per query to
-    // BENCH_DIAG.jsonl with session-age telemetry — driver heap in use,
-    // cumulative GC time/count, and bytes held by this JVM's shuffle
-    // dirs (blockmgr-*) — the bisect instrumentation for the in-pass
-    // degradation (VERDICT r9 item 3). Appended incrementally so a
-    // killed run keeps its evidence.
-    val diag = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIAG", "0") == "1"
-    def gcStats: (Long, Long) = {
-      import scala.jdk.CollectionConverters._
-      val bs = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.asScala
-      (bs.map(_.getCollectionTime).sum, bs.map(_.getCollectionCount).sum)
-    }
-    def heapMb: Long = {
-      val r = Runtime.getRuntime
-      (r.totalMemory - r.freeMemory) / (1024L * 1024)
-    }
-    def duRec(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles).map(_.map(duRec).sum).getOrElse(0L)
-    def shuffleMb: Long = Option(
-      new java.io.File(System.getProperty("java.io.tmpdir")).listFiles)
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.startsWith("blockmgr-") && f.isDirectory)
-      .map(duRec).sum / (1024L * 1024)
-    def jitMs: Long = java.lang.management.ManagementFactory
-      .getCompilationMXBean.getTotalCompilationTime
-    def diagLine(name: String, rs: Seq[Double]): Unit = if (diag) try {
-      val (gms, gn) = gcStats
-      val line = s"""{"q":"$name","runs":[${rs.mkString(",")}],""" +
-        s""""heap_mb":$heapMb,"gc_ms_cum":$gms,"gc_n_cum":$gn,""" +
-        s""""shuffle_mb":$shuffleMb,"jit_ms_cum":$jitMs}"""
-      val w = new java.io.FileWriter("BENCH_DIAG.jsonl", true)
-      try w.write(line + "\n") finally w.close()
-    } catch { case _: Throwable => () }
+    // Outlier-triggered extra repeats (round 9, [[OutlierRatio]]):
+    // `n_extra` in the artifact marks which values carry spike evidence,
+    // so a reader tells a host phase spike (n_extra>0, quiet median) from
+    // a plan regression (uniformly slow runs, or a slow median despite
+    // extras).
     val runsWithExtra: Map[String, (Seq[Double], Int)] =
-      timedQueries.map { case (name, fn) =>
-        if (prime) {
-          try fn(spark, sfDir).count()
-          catch { case _: Throwable => () }
-          sweep()
-        }
+      SparkEntry.queries.map { case (name, fn) =>
+        try fn(spark, sfDir).count()
+        catch { case _: Throwable => () }
+        sweep()
         def once(): Double = {
           val t0 = System.nanoTime()
           val sec =
@@ -487,11 +424,11 @@ object Bench {
         }
         var rs = (1 to repeats).map(_ => once())
         var extra = 0
-        while (extra < maxExtra && Bench.needsExtraRepeat(rs, outlierRatio)) {
+        while (extra < MaxExtraRepeats &&
+            Bench.needsExtraRepeat(rs, OutlierRatio)) {
           rs :+= once()
           extra += 1
         }
-        diagLine(name, rs)
         name -> (rs, extra)
       }
     val runs: Map[String, Seq[Double]] = runsWithExtra.map {
@@ -546,10 +483,7 @@ object Bench {
     // this run is [[Bench.ledgerFor]]'s decision — see its scaladoc for
     // the three clobber classes the routing guards against. The stdout
     // lines (what the driver parses) are unaffected by the routing.
-    // a restricted (BENCH_ONLY) run writes NO ledger file: its partial
-    // total would clobber a full-surface pin as a spuriously "faster" run
-    try if (only.isEmpty &&
-        masterEnv.exists(!ClusterProfile.isLocalMaster(_))) {
+    try if (masterEnv.exists(!GraftSession.isLocalMaster(_))) {
       // genuinely distributed master (local-cluster / standalone): its
       // own ledger file, overwrite-latest, no pin interaction — cluster
       // numbers include real serialization + transport and are not
@@ -561,7 +495,7 @@ object Bench {
       // cluster ledger (round-12 review)
       val w = new java.io.PrintWriter(s"BENCH_CLUSTER_sf$sfNum.json")
       try w.println(fullLine) finally w.close()
-    } else if (only.isEmpty) {
+    } else {
       // anchored to the metric, not the first "value": — field reordering
       // or format drift must not silently disable the slow-phase guard.
       // A ledger that exists but doesn't parse gets a LOUD stderr note

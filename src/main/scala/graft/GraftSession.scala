@@ -53,4 +53,70 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+
+  /** True for in-process masters — `local`, `local[N]`, `local[*]`,
+    * `local[N,F]` — and false for everything that forks executor JVMs
+    * (`local-cluster[...]`, `spark://`, `yarn`, ...). Used by Bench's
+    * ledger routing: only a genuinely distributed run may write the
+    * cluster ledger, so an explicitly-exported `SPARK_GRAFT_MASTER=
+    * local[32]` still faces the local pin's anti-ratchet guards instead
+    * of silently clobbering BENCH_CLUSTER numbers with in-process ones.
+    */
+  def isLocalMaster(master: String): Boolean =
+    master == "local" || master.matches("""local\[[^\]]*\]""")
+
+  /** The session profile of the repo's mains (Bench, Verify, PlanDump,
+    * GenScale, StreamChaos) — pure, spec'd (GraftSessionSpec). Returns
+    * the master and the builder confs; `extra` is each main's own
+    * additions and overrides, applied last.
+    *
+    * This is deliberately NOT [[recommendedConfs]]: switching would
+    * change the benchmarked and oracle-checked plans (extensions, 64 MiB
+    * broadcast), which is a measured decision of its own.
+    *
+    * Env contract (shared with the tools/ gate scripts):
+    *  - SPARK_GRAFT_CPUS           local cores and shuffle partitions
+    *    (default 4)
+    *  - SPARK_GRAFT_MASTER         master URL (default local[cpus])
+    *  - SPARK_GRAFT_JARS           app jar for executor classpaths
+    *    (local-cluster / standalone executor JVMs share nothing with the
+    *    driver's classpath)
+    *  - SPARK_GRAFT_EXEC_MEM       spark.executor.memory
+    *  - SPARK_GRAFT_TEXTCACHE_DIR  shared-filesystem TextCache root (the
+    *    java-temp fallback is driver-local by definition)
+    *  - SPARK_GRAFT_CHECKPOINT_DIR reliable-checkpoint root, applied by
+    *    [[harness]] once the session exists
+    */
+  def harnessConfs(env: Map[String, String],
+                   extra: Seq[(String, String)] = Nil)
+      : (String, Map[String, String]) = {
+    val cpus = env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cluster = Seq(
+      "SPARK_GRAFT_JARS" -> "spark.jars",
+      "SPARK_GRAFT_EXEC_MEM" -> "spark.executor.memory",
+      "SPARK_GRAFT_TEXTCACHE_DIR" -> graft.functions.TextCache.DirConfKey)
+      .flatMap { case (e, k) => env.get(e).map(k -> _) }
+    val confs = Map(
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false") ++ cluster ++ extra
+    (env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"), confs)
+  }
+
+  /** The one session builder of the mains: [[harnessConfs]] over the
+    * process env, then SPARK_GRAFT_CHECKPOINT_DIR (which also turns on
+    * [[graft.functions.Checkpoints.ReliableConfKey]] — executor loss must
+    * not strand an iterative operator mid-loop) and WARN logging. */
+  def harness(extra: (String, String)*): SparkSession = {
+    val (master, confs) = harnessConfs(sys.env, extra)
+    val spark = confs.foldLeft(SparkSession.builder().master(master)) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
+    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").foreach { dir =>
+      spark.sparkContext.setCheckpointDir(dir)
+      spark.conf.set(graft.functions.Checkpoints.ReliableConfKey, "true")
+    }
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -1,17 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Dev tool (round 12): dump `.explain("formatted")` for a named set of
-  * queries to per-query files — the before/after plan evidence the
-  * optimization rounds commit under `plans/r12/`.
+/** Dump `.explain("formatted")` for a named set of queries to per-query
+  * files — the before/after plan evidence optimization rounds commit
+  * under `plans/`.
   *
   * Usage: PlanDump <outDir> <suffix> q81_sim_jaccard[,q85_...]...
-  * Writes <outDir>/<query>_<suffix>.txt per query. Mirrors the bench's
-  * session config (local[$SPARK_GRAFT_CPUS], shuffle.partitions = cpus,
-  * 8 MiB splits) so the dumped plan is the plan the bench times — a
-  * local[4]/default-splits dump can differ in scan partitioning and AQE
-  * behavior.
+  * Writes <outDir>/<query>_<suffix>.txt per query, for the fixture at
+  * SPARK_GRAFT_SF_DIR (default: the sf0.1 test fixture). The session is
+  * the harness profile plus [[Bench.SessionConfs]], so at the same
+  * SPARK_GRAFT_CPUS (default 4) the dumped plan is the plan the bench
+  * times.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -21,16 +20,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", s"${8L * 1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-    ClusterProfile.configure(builder)
-    val spark = builder.getOrCreate()
-    ClusterProfile.installCheckpoints(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.harness(Bench.SessionConfs: _*)
     names.foreach { q =>
       val fn = SparkEntry.queries.getOrElse(q,
         sys.error(s"unknown query $q"))

@@ -172,35 +172,11 @@ object Checkpoints {
     * driver-count-gated broadcast decisions in [[Escalation.bcastIfSmall]]
     * — a checkpoint's `LogicalRDD` carries no stats, so Catalyst alone
     * can never pick a broadcast join inside a loop); paying a separate
-    * count job per round doubled the action count of every loop. Here the
-    * local path plants a LAZY local checkpoint (no job) and runs ONE
-    * `rdd.count()` — computing the plan, persisting the marked blocks,
-    * truncating lineage at job end, and returning n, all in that single
-    * job. The reliable (cluster) path keeps [[cut]]'s persist-then-
-    * checkpoint discipline and counts the checkpointed RDD directly (a
-    * cheap file-backed scan, no SQL agg plan).
-    */
+    * count job per round doubled the action count of every loop. See
+    * [[cutAndCount]]. */
   def cutCounted[T](ds: Dataset[T]): (Dataset[T], Long) = {
-    val reliable =
-      ds.sparkSession.conf.get(ReliableConfKey, "false").toBoolean
-    if (reliable) {
-      val cp = cut(ds)
-      (cp, rddOf(cp).map(_.count()).getOrElse(cp.count()))
-    } else {
-      val cp = ds.localCheckpoint(eager = false)
-      rddOf(cp) match {
-        case Some(rdd) => (cp, rdd.count())
-        case None => // unexpected plan shape — fall back to the 2-job form
-          val c = cut(ds); (c, rddOf(c).map(_.count()).getOrElse(c.count()))
-      }
-    }
-  }
-
-  /** [[rotate]] returning the new frame's row count ([[cutCounted]]). */
-  def rotateCounted[T](next: Dataset[T], prev: Dataset[_]): (Dataset[T], Long) = {
-    val r = cutCounted(next)
-    release(prev)
-    r
+    val (cp, n, _) = cutAndCount(ds, flagIdx = -1)
+    (cp, n)
   }
 
   /** [[cutCounted]] that ALSO counts rows whose boolean column `flagCol`
@@ -208,46 +184,44 @@ object Checkpoints {
     * state size (broadcast gating) and a frontier/settled count per
     * round; paying a separate filtered-count job doubled every round's
     * driver round-trips (measured: ~40–80 ms of job gap each at sf0.1).
-    * Here the materializing pass folds both counts per partition. A null
-    * flag counts as false. */
+    * A null flag counts as false. */
   def cutCountedFlag[T](ds: Dataset[T],
                         flagCol: String): (Dataset[T], Long, Long) = {
     val idx = ds.schema.fieldIndex(flagCol)
     require(ds.schema(idx).dataType ==
       org.apache.spark.sql.types.BooleanType,
       s"cutCountedFlag: $flagCol must be boolean, got ${ds.schema(idx)}")
-    def counts(rdd: org.apache.spark.rdd.RDD[
-        org.apache.spark.sql.catalyst.InternalRow]): (Long, Long) =
-      rdd.mapPartitions { it =>
-        var n = 0L; var t = 0L
-        it.foreach { r =>
-          n += 1L
-          if (!r.isNullAt(idx) && r.getBoolean(idx)) t += 1L
-        }
-        Iterator.single((n, t))
-      }.fold((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
+    cutAndCount(ds, idx)
+  }
+
+  /** Materialize `ds`, cut its lineage, and count its rows plus, when
+    * `flagIdx >= 0`, the rows whose boolean column at `flagIdx` is true.
+    * The local path plants a LAZY local checkpoint (no job) and folds both
+    * counts in ONE job over its RDD — computing the plan, persisting the
+    * marked blocks and truncating lineage at job end. The reliable
+    * (cluster) path keeps [[cut]]'s persist-then-checkpoint discipline and
+    * counts the checkpointed RDD directly (a cheap file-backed scan, no
+    * SQL agg plan). */
+  private def cutAndCount[T](ds: Dataset[T],
+                             flagIdx: Int): (Dataset[T], Long, Long) = {
     val reliable =
       ds.sparkSession.conf.get(ReliableConfKey, "false").toBoolean
-    if (reliable) {
-      val cp = cut(ds)
-      rddOf(cp) match {
-        case Some(rdd) => val (n, t) = counts(rdd); (cp, n, t)
-        case None => sys.error("cutCountedFlag: checkpoint left no RDD leaf")
+    val cp = if (reliable) cut(ds) else ds.localCheckpoint(eager = false)
+    // a lazy localCheckpoint and a reliable checkpoint both plant a
+    // LogicalRDD leaf; its absence is a Spark behaviour change to surface
+    val rdd = rddOf(cp).getOrElse(sys.error(
+      s"Checkpoints: checkpoint left no LogicalRDD leaf:\n" +
+        cp.queryExecution.analyzed.treeString))
+    val (rows, flagged) = rdd.mapPartitions { it =>
+      var n = 0L; var t = 0L
+      it.foreach { r =>
+        n += 1L
+        if (flagIdx >= 0 && !r.isNullAt(flagIdx) && r.getBoolean(flagIdx))
+          t += 1L
       }
-    } else {
-      val cp = ds.localCheckpoint(eager = false)
-      rddOf(cp) match {
-        case Some(rdd) =>
-          // one job: computes the plan, persists the lazily-marked
-          // blocks, and folds both counts (same mechanism as cutCounted)
-          val (n, t) = counts(rdd); (cp, n, t)
-        case None => // unexpected plan shape — 2-job fallback
-          val c = cut(ds)
-          val rdd = rddOf(c).getOrElse(
-            sys.error("cutCountedFlag: checkpoint left no RDD leaf"))
-          val (n, t) = counts(rdd); (c, n, t)
-      }
-    }
+      Iterator.single((n, t))
+    }.fold((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
+    (cp, rows, flagged)
   }
 
   /** [[rotate]] returning (frame, rows, rows with `flagCol` true) in one

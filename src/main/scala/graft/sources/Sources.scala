@@ -106,35 +106,13 @@ object Sources {
     * delta, written back over the cache). A naive overwrite would delete
     * the input out from under the running job; this writes to a staging
     * dir first (fully materializing `df` while the original is still
-    * intact), then swaps with the same checked park/promote discipline as
-    * [[compactParquet]] — an abort leaves the data whole in exactly one of
-    * the two named locations, and the next call self-heals. The swap
-    * bypasses Spark's own overwrite bookkeeping, so the path's entries in
-    * the shared Dataset cache are refreshed explicitly: a frame persisted
-    * over the old table would otherwise keep serving its rows.
+    * intact), then swaps it in ([[swapParquet]]).
     */
   def replaceParquet(spark: SparkSession, df: DataFrame, path: String)
   : DataFrame = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(
-      hPath.getParent, s".${hPath.getName}.replacing")
-    val old = new org.apache.hadoop.fs.Path(
-      hPath.getParent, s".${hPath.getName}.old")
-    def step(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(
-        s"replaceParquet: $what failed; data intact at " +
-          (if (fs.exists(hPath)) path else old.toString))
-    if (fs.exists(old) && !fs.exists(hPath))
-      step(fs.rename(old, hPath), s"restore of parked $old")
-    if (fs.exists(old)) step(fs.delete(old, true), s"cleanup of stale $old")
-    if (fs.exists(staging))
-      step(fs.delete(staging, true), s"cleanup of stale $staging")
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    if (fs.exists(hPath)) step(fs.rename(hPath, old), s"park of $path")
-    step(fs.rename(staging, hPath), s"promote of $staging")
-    fs.delete(old, true) // best-effort; next call clears a leftover
-    spark.catalog.refreshByPath(path)
+    swapParquet(spark, path, "replacing", "replaceParquet") { staging =>
+      df.write.mode(SaveMode.Overwrite).parquet(staging)
+    }
     spark.read.parquet(path)
   }
 
@@ -145,18 +123,8 @@ object Sources {
     * per tiny file, footer reads, no vectorized run length) comes to
     * dominate. Rewrites `path` to `ceil(bytes / targetBytes)` files via
     * `coalesce` (no shuffle — compaction repacks, it does not
-    * repartition).
-    *
-    * Crash contract (generic Hadoop FS has no multi-path atomic op, so
-    * the swap is RECOVERABLE rather than atomic): the rewrite lands in a
-    * staging dir; the swap parks the original at `.<name>.old`, promotes
-    * the staging dir, then drops the parked copy. Every rename's return
-    * value is CHECKED (HDFS reports failure by returning false, not by
-    * throwing) — a failed step aborts with the data still intact in
-    * exactly one of the two named locations, and the next call
-    * self-heals: a parked `.old` with no live table is restored before
-    * compacting; stale staging/`.old` leftovers from an abort after
-    * promotion are cleared.
+    * repartition), then swaps the rewrite in ([[swapParquet]]). Returns
+    * the number of files written.
     */
   def compactParquet(spark: SparkSession, path: String,
                      targetBytes: Long = 128L * 1024 * 1024): Long = {
@@ -171,31 +139,64 @@ object Sources {
     // files per partition (multi-level key=/key= nests recurse further).
     val partDirs = fs.listStatus(hPath)
       .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-    if (partDirs.nonEmpty)
-      return partDirs.map(d =>
+    if (partDirs.nonEmpty) {
+      val files = partDirs.map(d =>
         compactParquet(spark, d.getPath.toString, targetBytes)).sum
+      // a frame over the table root is not under any leaf's path
+      spark.catalog.refreshByPath(path)
+      return files
+    }
+    swapParquet(spark, path, "compacting", "compactParquet") { staging =>
+      val bytes = fs.getContentSummary(hPath).getLength
+      val files = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+      spark.read.parquet(path).coalesce(files)
+        .write.mode(SaveMode.Overwrite).parquet(staging)
+      files.toLong
+    }
+  }
+
+  /** Rewrite the table at `path` through a staging dir: `write` lands the
+    * new table at the staging path it is given, then the swap parks the
+    * original at `.<name>.old`, promotes the staging dir and drops the
+    * parked copy.
+    *
+    * Crash contract (generic Hadoop FS has no multi-path atomic op, so
+    * the swap is RECOVERABLE rather than atomic): every rename's return
+    * value is CHECKED (HDFS reports failure by returning false, not by
+    * throwing) — a failed step aborts with the data still intact in
+    * exactly one of the two named locations, and the next call
+    * self-heals before writing: a parked `.old` with no live table is
+    * restored; stale staging/`.old` leftovers from an abort after
+    * promotion are cleared.
+    *
+    * The swap bypasses Spark's own overwrite bookkeeping, so the path's
+    * entries in the shared Dataset cache are refreshed explicitly: a
+    * frame persisted over the old table would otherwise keep serving its
+    * rows.
+    */
+  private def swapParquet[A](spark: SparkSession, path: String,
+                             stagingSuffix: String, op: String)
+                            (write: String => A): A = {
+    val hPath = new org.apache.hadoop.fs.Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new org.apache.hadoop.fs.Path(
-      hPath.getParent, s".${hPath.getName}.compacting")
+      hPath.getParent, s".${hPath.getName}.$stagingSuffix")
     val old = new org.apache.hadoop.fs.Path(
       hPath.getParent, s".${hPath.getName}.old")
     def step(ok: Boolean, what: String): Unit =
       if (!ok) throw new java.io.IOException(
-        s"compactParquet: $what failed; data intact at " +
+        s"$op: $what failed; data intact at " +
           (if (fs.exists(hPath)) path else old.toString))
-    // recover from a previous crash between park and promote
     if (fs.exists(old) && !fs.exists(hPath))
       step(fs.rename(old, hPath), s"restore of parked $old")
-    // clear stale leftovers from an abort after promotion
     if (fs.exists(old)) step(fs.delete(old, true), s"cleanup of stale $old")
     if (fs.exists(staging))
       step(fs.delete(staging, true), s"cleanup of stale $staging")
-    val bytes = fs.getContentSummary(hPath).getLength
-    val files = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(path).coalesce(files)
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    step(fs.rename(hPath, old), s"park of $path")
+    val result = write(staging.toString)
+    if (fs.exists(hPath)) step(fs.rename(hPath, old), s"park of $path")
     step(fs.rename(staging, hPath), s"promote of $staging")
     fs.delete(old, true) // best-effort; next call clears a leftover
-    files.toLong
+    spark.catalog.refreshByPath(path)
+    result
   }
 }

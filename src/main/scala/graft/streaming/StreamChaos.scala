@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import java.sql.Timestamp
@@ -41,8 +41,8 @@ case class ChaosDoc(doc_id: Long, ts: Timestamp, text: String)
   * the deterministic contract.
   *
   * Usage (one command): tools/stream_chaos_test.sh
-  * Env: SPARK_GRAFT_MASTER / SPARK_GRAFT_JARS / SPARK_GRAFT_EXEC_MEM /
-  *      SPARK_GRAFT_CPUS as in Verify; SPARK_GRAFT_CHAOS_DOCS to resize
+  * Env: the harness profile ([[graft.GraftSession.harnessConfs]]) with
+  *      a non-local SPARK_GRAFT_MASTER; SPARK_GRAFT_CHAOS_DOCS to resize
   *      the corpus (default 40000 — sized so a stage-2 micro-batch runs
   *      multiple seconds under local-cluster, wide enough to straddle a
   *      kill).
@@ -112,18 +112,14 @@ object StreamChaos {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_CHAOS_DOCS", "40000").toInt
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER",
-        "local-cluster[2,4,2048]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.ClusterProfile.configure(builder)
-    val spark = builder.getOrCreate()
-    graft.ClusterProfile.installCheckpoints(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    require(sys.env.get("SPARK_GRAFT_MASTER")
+        .exists(!graft.GraftSession.isLocalMaster(_)),
+      "StreamChaos SIGKILLs executor JVMs, so it needs a master that forks " +
+        "them: set SPARK_GRAFT_MASTER=local-cluster[...] (as " +
+        "tools/stream_chaos_test.sh does), got " +
+        sys.env.getOrElse("SPARK_GRAFT_MASTER", "<unset>"))
+    val spark = graft.GraftSession.harness()
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft-chaos")

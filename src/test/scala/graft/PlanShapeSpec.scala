@@ -1,6 +1,6 @@
 package graft
 
-/** Physical-plan shape regressions: the scale properties PlanAudit checks
+/** Physical-plan shape regressions: the scale properties a PlanDump shows
   * by eye, pinned as assertions — broadcast joins stay broadcast, pushdown
   * stays pushed, top-k stays TakeOrderedAndProject, quadratic paths stay
   * cartesian-free. A change that silently degrades one of these would pass

@@ -197,6 +197,35 @@ class SourcesSpec extends SparkSpec {
     assert(after.sameElements(before), "partitioned compaction changed data")
   }
 
+  test("compaction refreshes a Dataset cached over the table, flat or " +
+    "hive-partitioned: the cache lists only files that still exist") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val root = Files.createTempDirectory("graft-compact-cache").toString
+    Tables.orders(spark, sfDir).repartition(8).write.parquet(s"$root/flat")
+    Tables.documents(spark, sfDir).repartition(8)
+      .write.partitionBy("lang").parquet(s"$root/part")
+    Seq(s"$root/flat", s"$root/part").foreach { dir =>
+      val cached = spark.read.parquet(dir).persist()
+      try {
+        val n = cached.count()
+        Sources.compactParquet(spark, dir)
+        val reread = spark.read.parquet(dir)
+        val listed = reread.queryExecution.withCachedData.collect {
+          case r: InMemoryRelation => r.cacheBuilder.cachedPlan.collect {
+            case s: FileSourceScanExec => s.relation.location.inputFiles.toSeq
+          }.flatten
+        }.flatten
+        assert(listed.nonEmpty, s"$dir: the re-read missed the cache")
+        val gone = listed.filterNot(f =>
+          new java.io.File(new java.net.URI(f)).exists())
+        assert(gone.isEmpty,
+          s"$dir: the cache still lists swapped-out files: ${gone.take(3)}")
+        assert(reread.count() == n)
+      } finally cached.unpersist()
+    }
+  }
+
   test("cached result equals uncached result") {
     val q = Tables.lineitem(spark, sfDir)
       .groupBy("l_returnflag").agg(round(sum("l_quantity"), 2).as("s"))

@@ -5,8 +5,11 @@
 # (`sbt -batch compile`); this runs whatever is in target/scala-2.13.
 #
 # Usage: tools/bench_java.sh [mainClass [args...]]
-# Env (same as the sbt path): SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
-#   SPARK_DRIVER_MEM, SPARK_GRAFT_JAVA_OPTS, SPARK_GRAFT_BENCH_*.
+# Env: SPARK_DRIVER_MEM and SPARK_GRAFT_JAVA_OPTS shape this JVM; the
+#   session profile every main shares (SPARK_GRAFT_CPUS, _MASTER, _JARS,
+#   _EXEC_MEM, _TEXTCACHE_DIR, _CHECKPOINT_DIR) is read by
+#   graft.GraftSession.harness; graft.Bench also reads SPARK_GRAFT_SF_DIR,
+#   _CALIB, _CALIB_ONLY, _BENCH_REPEATS and _BENCH_FORCE.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 MAIN="${1:-graft.Bench}"

@@ -17,6 +17,7 @@ jar cf "$JAR" -C target/scala-2.13/classes .
 
 SPARK_HOME=/opt/spark \
 SPARK_SCALA_VERSION=2.13 \
+SPARK_GRAFT_MASTER="${SPARK_GRAFT_MASTER:-local-cluster[2,4,2048]}" \
 SPARK_GRAFT_JARS="$JAR" \
 SPARK_GRAFT_EXEC_MEM="${SPARK_GRAFT_EXEC_MEM:-1536m}" \
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
