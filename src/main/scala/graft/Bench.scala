@@ -314,6 +314,17 @@ object Bench {
     "spark.cleaner.periodicGC.interval" -> "90s",
     "spark.sql.files.maxPartitionBytes" -> (8L * 1024 * 1024).toString)
 
+  /** The JIT warm-up fixture for `sfDir`: its `sf0.001` sibling, or None
+    * when that is `sfDir` itself — the priming pass then already runs
+    * every query once at the target, and a warm-up pass would repeat it.
+    */
+  def warmDirFor(sfDir: String): Option[String] = {
+    val target = new java.io.File(sfDir).getAbsoluteFile
+    val warm = new java.io.File(target.getParentFile, "sf0.001")
+    if (warm.getCanonicalPath == target.getCanonicalPath) None
+    else Some(warm.getPath)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -364,23 +375,22 @@ object Bench {
     // throughput at the target sf, not per-query codegen compilation
     // (observed ~1-3 s of one-time compile cost on expression-heavy
     // queries). Standard bench hygiene, applied identically at every sf;
-    // falls back to a single q20 warm-up if the small fixture is absent.
+    // falls back to a single q20 warm-up if the small fixture is absent,
+    // and is skipped when the target IS the small fixture (warmDirFor).
     // NOTE: this warm-every-query methodology started in round 3 — r01/r02
     // ledger numbers were taken under a single-query warm-up and include
     // per-query JIT (see BASELINE.md ledger).
-    val warmDir =
-      new java.io.File(sfDir).getParentFile match {
-        case null => "/root/testdata/sf0.001"
-        case p => new java.io.File(p, "sf0.001").getPath
-      }
-    if (new java.io.File(warmDir).isDirectory)
-      SparkEntry.queries.values.foreach { fn =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
-        sweep()
-      }
-    else
-      try SparkEntry.queries.get("q20_agg_hash").foreach(_(spark, sfDir).count())
-      catch { case _: Throwable => () }
+    warmDirFor(sfDir) match {
+      case Some(warmDir) if new java.io.File(warmDir).isDirectory =>
+        SparkEntry.queries.values.foreach { fn =>
+          try fn(spark, warmDir).count() catch { case _: Throwable => () }
+          sweep()
+        }
+      case Some(_) =>
+        try SparkEntry.queries.get("q20_agg_hash").foreach(_(spark, sfDir).count())
+        catch { case _: Throwable => () }
+      case None => // the priming below already runs every query once here
+    }
     // Median-of-N timing (round 6, default 3): a single-shot run lands
     // anywhere in the ±20% I/O-variance band (BASELINE.md item 16) and
     // every round needed sentinel-query forensics to interpret it; the

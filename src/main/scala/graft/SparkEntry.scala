@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
+import graft.plans.GraftPlanner
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -16,8 +17,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     AggQueries.q20_agg_hash(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * installs graft's planner on its session ([[GraftPlanner.install]])
+    * before it builds the query, so the query and the eager jobs of its
+    * build plan with graft's rule and strategy in any session.
+    */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map { case (name, build) =>
+      name -> { (spark: SparkSession, dir: String) =>
+        GraftPlanner.install(spark)
+        build(spark, dir)
+      }
+    }
+
+  private val declared: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A. scan / filter / project / sort / limit
     "q01_scan_project" -> (CoreQueries.q01_scan_project _),
     "q02_filter_where" -> (CoreQueries.q02_filter_where _),

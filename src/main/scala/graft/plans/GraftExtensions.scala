@@ -20,13 +20,11 @@ import org.apache.spark.sql.types.DoubleType
   *    (the standard `SparkSessionExtensions` injection path);
   *  - per-session: `GraftExtensions.register(spark)` on a live session.
   *
-  * No custom optimizer `Rule` is injected — SURVEY §7.3: Catalyst's
-  * built-ins cover every declared query. One custom `SparkStrategy` exists
-  * where a whole OPERATOR (not a rewrite) earns its keep:
-  * [[graft.plans.TopKStrategy]] plans per-key top-k as partial/final
-  * bounded heaps (map-side combine the Window formulation cannot do); it
-  * registers on `spark.experimental.extraStrategies` via `TopK.perKey`
-  * rather than here, so plain sessions keep stock planning.
+  * The extension registers functions only. How a session plans is
+  * changed in one place, [[GraftPlanner.install]] (graft's one optimizer
+  * `Rule`, [[SmallFinalSort]], and its one `SparkStrategy`,
+  * [[TopKStrategy]]), which every `SparkEntry.queries` entry and
+  * `TopK.perKey` call on their session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

@@ -169,8 +169,9 @@ object TopKStrategy extends SparkStrategy {
 object TopK {
 
   /** The `k` best rows per key group under `order` (first = rank 1).
-    * Registers [[TopKStrategy]] on the session's experimental strategies
-    * (idempotent). Pass a TOTAL ordering for deterministic boundary ties.
+    * Installs graft's planner, [[TopKStrategy]] included, on the session
+    * ([[GraftPlanner.install]]). Pass a TOTAL ordering for deterministic
+    * boundary ties.
     */
   def perKey(df: DataFrame, keyCols: Seq[String], order: Seq[Column],
              k: Int): DataFrame = {
@@ -181,9 +182,7 @@ object TopK {
       "TopK.perKey requires at least one key column; " +
         "for a global top-k use orderBy(...).limit(k)")
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
+    GraftPlanner.install(spark)
     val keyExprs = keyCols.map(n => GraftColumn.expr(df(n)))
     val sortOrders = order.map(c => GraftColumn.expr(c) match {
       case so: SortOrder => so

@@ -137,11 +137,20 @@ object Sources {
     // unpartitioned — destroying directory pruning and the external
     // layout contract. Recursing preserves the tree exactly and sizes
     // files per partition (multi-level key=/key= nests recurse further).
-    val partDirs = fs.listStatus(hPath)
-      .filter(st => st.isDirectory && st.getPath.getName.contains("="))
+    // Hidden names are not partitions. A leaf that an interrupted swap
+    // parked as `.<key=value>.old` is compacted through its live path,
+    // where the swap's self-heal restores it (a missing path lists as
+    // empty and goes straight to the swap).
+    val dirs =
+      if (!fs.exists(hPath)) Array.empty[String]
+      else fs.listStatus(hPath).filter(_.isDirectory).map(_.getPath.getName)
+    val partDirs = (dirs.filterNot(n => n.startsWith(".") || n.startsWith("_")) ++
+      dirs.collect { case ParkedLeaf(leaf) => leaf })
+      .filter(_.contains("=")).distinct
     if (partDirs.nonEmpty) {
       val files = partDirs.map(d =>
-        compactParquet(spark, d.getPath.toString, targetBytes)).sum
+        compactParquet(spark, new org.apache.hadoop.fs.Path(hPath, d).toString,
+          targetBytes)).sum
       // a frame over the table root is not under any leaf's path
       spark.catalog.refreshByPath(path)
       return files
@@ -154,6 +163,9 @@ object Sources {
       files.toLong
     }
   }
+
+  /** The live name of a directory [[swapParquet]] parked. */
+  private val ParkedLeaf = """\.(.+)\.old""".r
 
   /** Rewrite the table at `path` through a staging dir: `write` lands the
     * new table at the staging path it is given, then the swap parks the

@@ -38,4 +38,13 @@ class BenchTotalSpec extends AnyFunSuite {
       scala.collection.immutable.ListMap("q01_a" -> 1.5, "q09_x" -> -1.0))
     assert(unit == "ms" && qs == "01:1500,09:-1000")
   }
+
+  test("warmDirFor warms on the sf0.001 sibling, and not at all when " +
+    "the target is sf0.001 itself") {
+    assert(Bench.warmDirFor("/data/sf0.1") == Some("/data/sf0.001"))
+    assert(Bench.warmDirFor("/data/sf1/") == Some("/data/sf0.001"))
+    assert(Bench.warmDirFor("/data/sf0.001").isEmpty)
+    assert(Bench.warmDirFor("/data/sf0.001/").isEmpty)
+    assert(Bench.warmDirFor("/data/x/../sf0.001").isEmpty)
+  }
 }

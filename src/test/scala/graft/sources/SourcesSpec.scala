@@ -197,6 +197,21 @@ class SourcesSpec extends SparkSpec {
     assert(after.sameElements(before), "partitioned compaction changed data")
   }
 
+  test("compaction restores a hive leaf an interrupted swap left parked " +
+    "as .<leaf>.old") {
+    val dir = Files.createTempDirectory("graft-compact-parked").toString + "/t"
+    Tables.documents(spark, sfDir).write.partitionBy("lang").parquet(dir)
+    val n = spark.read.parquet(dir).count()
+    val leaf = new java.io.File(dir, "lang=en")
+    val parked = new java.io.File(dir, ".lang=en.old")
+    assert(leaf.renameTo(parked), "could not park the lang=en leaf")
+    assert(spark.read.parquet(dir).count() < n, "the parked leaf is visible")
+    Sources.compactParquet(spark, dir)
+    assert(spark.read.parquet(dir).count() == n)
+    assert(leaf.isDirectory && !parked.exists(), "the parked leaf was left")
+    assert(!new java.io.File(dir).list().exists(_.endsWith(".old")))
+  }
+
   test("compaction refreshes a Dataset cached over the table, flat or " +
     "hive-partitioned: the cache lists only files that still exist") {
     import org.apache.spark.sql.execution.FileSourceScanExec
