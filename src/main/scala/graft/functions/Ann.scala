@@ -125,9 +125,9 @@ object Ann {
     * crossJoin (k·n rows, k small) scored by the codegen'd
     * [[graft.expressions.DotProductD]] (L2² = |a|²+|b|²−2a·b with
     * per-row norms computed once) + one argmin window; update = posexplode
-    * → per-(cell, dim) avg → reassemble. Centroids are checkpointed per
-    * iteration via [[Checkpoints]] with the superseded round's blocks
-    * freed (k rows — cuts the iterative lineage, never collects the
+    * → per-(cell, dim) avg → reassemble. Centroids are cut per iteration
+    * on the counted loop driver [[Checkpoints.iterateCounted]], which
+    * frees the superseded round's blocks (k rows — cuts the iterative lineage, never collects the
     * corpus). NOT hash-checkable cross-engine: float centroid
     * averaging is partition-order-dependent — same unit-tier status as
     * IVF routing (SURVEY q98 note).
@@ -138,35 +138,31 @@ object Ann {
   def kmeans(corpus: DataFrame, idCol: String, vecCol: String,
              k: Int, iters: Int = 5): DataFrame = {
     require(k >= 1 && iters >= 1, s"k=$k and iters=$iters must be >= 1")
-    // init = the k smallest ids via TakeOrderedAndProject (distributed
-    // top-k — not a global-window single partition)
-    var centroids = Checkpoints.cut(corpus
-      .select(col(idCol), col(vecCol).as("centroid"))
-      .orderBy(col(idCol).asc).limit(k)
-      .select((row_number().over(Window.orderBy(col(idCol).asc)) - 1)
-        .as("cell"), col("centroid")))
     val body = corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"),
       graft.Det.dotD(col(vecCol), col(vecCol)).as("__n2"))
-    var assigned: DataFrame = null
-    var it = 0
-    while (it < iters) {
-      val aw = Window.partitionBy(col("__id"))
-        .orderBy(col("__d2").asc, col("cell").asc)
-      assigned = body.crossJoin(broadcast(centroids))
+    val aw = Window.partitionBy(col("__id"))
+      .orderBy(col("__d2").asc, col("cell").asc)
+    def assign(centroids: DataFrame): DataFrame =
+      body.crossJoin(broadcast(centroids))
         .withColumn("__d2",
           col("__n2") + graft.Det.dotD(col("centroid"), col("centroid"))
             - lit(2.0) * graft.Det.dotD(col("__v"), col("centroid")))
         .withColumn("__rk", row_number().over(aw))
         .filter(col("__rk") === 1)
         .select(col("__id"), col("__v"), col("cell"))
-      it += 1
-      if (it < iters) {
-        centroids = Checkpoints.rotate(
-          meanVectors(assigned, col("cell"), col("__v"), "cell", "centroid"),
-          prev = centroids)
-      }
-    }
-    assigned.select(col("__id").as(idCol), col("cell"))
+    // iters assignments, iters - 1 centroid updates in between; init =
+    // the k smallest ids via TakeOrderedAndProject (distributed top-k —
+    // not a global-window single partition)
+    val centroids = Checkpoints.iterateCounted(corpus
+        .select(col(idCol), col(vecCol).as("centroid"))
+        .orderBy(col(idCol).asc).limit(k)
+        .select((row_number().over(Window.orderBy(col(idCol).asc)) - 1)
+          .as("cell"), col("centroid")),
+      iters - 1) { prev =>
+      meanVectors(assign(prev.frame), col("cell"), col("__v"), "cell",
+        "centroid")
+    }.frame
+    assign(centroids).select(col("__id").as(idCol), col("cell"))
   }
 
   /** IVF-style search: coarse centroids = per-`coarseKey` mean vectors

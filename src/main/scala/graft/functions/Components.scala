@@ -43,7 +43,7 @@ import scala.collection.mutable
   * doesn't rescue it — with randomly-ordered ids the label forest stays
   * 1-2 deep (labels point at local minima) while the min value still
   * crawls one hop per round. A propagation loop with per-round
-  * `localCheckpoint` lineage cuts (persist alone keeps lineage and the
+  * lineage cuts (persist alone keeps lineage and the
   * self-referential plan doubles per round until analysis OOMs) is kept
   * as [[propagationLoop]] for non-long id types; the contraction path is
   * strictly better whenever ids are integral, which every fixture and
@@ -207,12 +207,12 @@ object Components {
       // blocks are superseded and freed — the recursion pins at most two
       // (geometrically shrinking) edge frames at a time. The FINAL
       // level's checkpoint stays: the lazily-returned base case reads it.
-      val sym = Checkpoints.cut(symmetrize(
+      // the level's edge count rides in the job that materializes it
+      val Checkpoints.Counted(sym, m, _) = Checkpoints.cutCounted(symmetrize(
         stars(edges.repartition(
           width(edgeCount, localThreshold), col("_1"))).toDF("s", "t"),
         "s", "t"))
       prevCp.foreach(Checkpoints.release)
-      val m = sym.count()
       if (m >= edgeCount * 9 / 10) {
         // Stall: contraction only shrinks where a node's neighborhood is
         // dense (a source's edges all co-locate); a contracted graph that
@@ -230,36 +230,33 @@ object Components {
   }
 
   /** Fallback for non-integral id types: Pregel-style min-label
-    * propagation with a changed-node frontier, old-label carry for
-    * join-free change detection, and per-round localCheckpoint lineage
-    * cuts. Rounds = component diameter — fine for the small graphs this
-    * path serves. */
+    * propagation with a changed-node frontier and old-label carry for
+    * join-free change detection, on the counted loop driver (a lineage cut
+    * per round). Rounds = component diameter — fine for the small graphs
+    * this path serves. */
   private def propagationLoop(edges0: DataFrame, edgeCount: Long,
                               maxIter: Int): DataFrame = {
     val p = width(edgeCount, LocalEdgeThreshold)
     val edges = edges0.repartition(p, col("s"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // `cp` is the round's checkpoint handle; labels/frontier are lazy
-      // views over it, so the PREVIOUS round's blocks are free to release
-      // as soon as the new checkpoint materializes
-      var cp = Checkpoints.cut(
+      // `adv` marks the rows whose label improved in a round — every row
+      // of the initial labelling — so the frontier is the flagged rows,
+      // and the convergence probe is the flag count the cut's own job
+      // folds, not a second driver round-trip per round
+      val end = Checkpoints.iterateCounted(
         edges.select(col("s").as("id")).distinct()
-          .withColumn("component", col("id")))
-      var labels = cp
-      var frontier = cp
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIter) {
-        val msgs = frontier
-          .join(edges, frontier("id") === edges("s"))
-          .select(col("t").as("id"), col("component"), lit(false).as("self"))
-        // `adv` marks rows whose label improved this round; counting it
-        // inside the rotate's materializing job (cutCountedFlag) makes
-        // the convergence probe free — the old frontier.limit(1).count()
-        // was a second driver round-trip per round
-        val (next, _, advanced) = Checkpoints.rotateCountedFlag(
-          labels
+          .withColumn("component", col("id"))
+          .withColumn("adv", lit(true)),
+        maxIter, Some("adv"))(
+        step = { prev =>
+          val frontier = prev.frame.filter(col("adv"))
+            .select("id", "component")
+          val msgs = frontier
+            .join(edges, frontier("id") === edges("s"))
+            .select(col("t").as("id"), col("component"),
+              lit(false).as("self"))
+          prev.frame
             .select(col("id"), col("component"), lit(true).as("self"))
             .union(msgs)
             .repartition(p, col("id"))
@@ -267,18 +264,12 @@ object Components {
               min("component").as("component"),
               max(when(col("self"), col("component"))).as("old"))
             .withColumn("adv",
-              coalesce(col("component") < col("old"), lit(false))),
-          prev = cp, flagCol = "adv")
-        cp = next
-        frontier = next.filter(col("adv"))
-          .select("id", "component")
-        converged = advanced == 0L
-        labels = next.select("id", "component")
-        iter += 1
-      }
-      require(converged,
+              coalesce(col("component") < col("old"), lit(false)))
+        },
+        done = (_, cur) => cur.flagged == 0L)
+      require(end.flagged == 0L,
         s"connectedComponents did not converge in $maxIter rounds")
-      labels
+      end.frame.select("id", "component")
     } finally edges.unpersist(blocking = false)
   }
 }

@@ -147,8 +147,9 @@ object Escalation {
     * NEVER plans a broadcast join inside a loop, and even AQE's runtime
     * SMJ→BHJ conversion still pays the exchange it converted (the shuffle
     * is materialized before stats exist). The loops, however, KNOW their
-    * frame sizes — [[Checkpoints.cutCounted]] returns the row count with
-    * the materialization — so the strategy choice the optimizer can't
+    * frame sizes — the counted loop driver [[Checkpoints.iterateCounted]]
+    * hands each step the previous round's row count, folded in the job
+    * that materialized it — so the strategy choice the optimizer can't
     * make from stats is made here from exact runtime counts: hint
     * broadcast while the side fits, fall back to the unhinted (shuffle)
     * plan the moment it doesn't. Scale-adaptive by construction — a

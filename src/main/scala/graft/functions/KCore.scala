@@ -54,7 +54,7 @@ object KCore {
     require(rounds >= 1, s"KCore.peel: rounds must be >= 1, got $rounds")
     // cut BEFORE symmetrizing: the pair pipeline (q202: a cell join plus
     // haversine) runs once, and its row count rides in the same job
-    val (und, n) = Checkpoints.cutCounted(
+    val Checkpoints.Counted(und, n, _) = Checkpoints.cutCounted(
       pairs.filter(col(aCol).isNotNull && col(bCol).isNotNull)
         .select(col(aCol).cast("long").as("a"),
           col(bCol).cast("long").as("b")))
@@ -122,23 +122,20 @@ object KCore {
 
   /** Distributed rounds for edge lists beyond one task: symmetrize by
     * union, then per round one two-phase degree agg + two same-key joins
-    * on a monotonically shrinking edge frame, with a per-round lineage
-    * cut that frees its predecessor. */
-  private def distributed(und: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var e = Checkpoints.rotate(
+    * on a monotonically shrinking edge frame, on the counted loop driver
+    * (a lineage cut per round that frees its predecessor; the pair list
+    * is freed once the rounds end). */
+  private def distributed(und: DataFrame, k: Int, rounds: Int): DataFrame =
+    Checkpoints.iterateCounted(
       und.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(und.select(col("b").as("src"), col("a").as("dst"))),
-      prev = und)
-    for (_ <- 1 to rounds) {
+      rounds, inputs = Seq(und)) { prev =>
+      val e = prev.frame
       val v = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("src").as("id"))
-      e = Checkpoints.rotate(
-        e.join(v.select(col("id").as("src")), Seq("src"))
-          .join(v.select(col("id").as("dst")), Seq("dst"))
-          .select(col("src"), col("dst")),
-        prev = e)
-    }
-    e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      e.join(v.select(col("id").as("src")), Seq("src"))
+        .join(v.select(col("id").as("dst")), Seq("dst"))
+        .select(col("src"), col("dst"))
+    }.frame.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("id"), col("deg"))
-  }
 }

@@ -18,11 +18,15 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the edge frame is repartitioned by src once and
   * checkpointed; each round shuffles only the reached-set frame
-  * (≤ |V| rows) to the edge partitioning and min-combines map-side.
-  * Lineage is cut per round via [[graft.functions.Checkpoints]] (the
-  * q143/q148 rule), with the superseded round's blocks freed — a k-round
-  * run pins one distance frame, not k. Unreached vertices simply never
-  * enter the frame — no sentinel distances to carry.
+  * (≤ |V| rows) to the edge partitioning and min-combines map-side. The
+  * rounds run on the fixed-round loop driver
+  * [[graft.functions.Checkpoints.iterate]]: lazy on the local profile
+  * (the union and the step read the distance frame twice, but both
+  * references end at the same aggregate exchange, which AQE reuses, so
+  * execution stays linear in rounds), cut per round with the superseded
+  * round freed on the reliable one. Unreached vertices simply never
+  * enter the frame — no sentinel distances to carry. Hop counting is the
+  * weighted relaxation with unit weights: one loop serves both.
   */
 object Bfs {
 
@@ -30,30 +34,9 @@ object Bfs {
     * over directed `edges` (src, dst). Returns (id, hops) for vertices
     * reached within `rounds` hops; seeds are hops=0.
     */
-  def hops(seeds: DataFrame, edges: DataFrame, rounds: Int): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    import graft.functions.Checkpoints
-    val e = Checkpoints.cut(
-      edges.select(col("src"), col("dst")).repartition(col("src")))
-    var dist = Checkpoints.cut(seeds.select(col("id"), lit(0L).as("hops")))
-    for (_ <- 1 to rounds) {
-      val step = e.join(dist, col("src") === col("id"))
-        .select(col("dst").as("id"), (col("hops") + lit(1L)).as("hops"))
-      // local profile: lazy rounds — dist is read twice per round (union
-      // + step), but both references end at the SAME aggregate exchange,
-      // which AQE reuses, so execution stays linear in rounds; the
-      // per-round checkpoint was k driver round-trips (see
-      // rotateIfReliable). Reliable profile keeps per-round durability.
-      dist = Checkpoints.rotateIfReliable(
-        dist.unionByName(step)
-          .groupBy(col("id")).agg(min(col("hops")).as("hops")),
-        prev = dist)
-    }
-    if (dist.sparkSession.conf
-        .get(Checkpoints.ReliableConfKey, "false").toBoolean)
-      Checkpoints.release(e)  // lazy local rounds still read e
-    dist
-  }
+  def hops(seeds: DataFrame, edges: DataFrame, rounds: Int): DataFrame =
+    relax(seeds, edges.select(col("src"), col("dst"), lit(1L).as("w")),
+      rounds, "hops")
 
   /** Bounded Bellman–Ford: weighted shortest-path distances after
     * `rounds` relaxations from `seeds` over directed `edges`
@@ -61,35 +44,28 @@ object Bfs {
     * for vertices reachable within `rounds` hops — after k rounds,
     * dist(v) is the exact minimum weight over all paths of ≤ k edges
     * (Bellman–Ford's invariant), so with rounds ≥ |V|−1 it is the true
-    * shortest path. Same exactness argument as [[hops]]: integer sums
-    * and an idempotent/commutative min make every round layout- and
-    * merge-order-independent, and a SQL engine replays the bounded
-    * recursion as k unrolled UNION+min CTEs.
-    *
-    * Scale shape: identical to [[hops]] — edges partitioned by src once,
-    * per-round shuffle is the ≤|V|-row frontier frame, min combines
-    * map-side, lineage cut per round.
+    * shortest path. Integer sums and an idempotent/commutative min make
+    * every round layout- and merge-order-independent, and a SQL engine
+    * replays the bounded recursion as k unrolled UNION+min CTEs.
     */
   def shortestPaths(seeds: DataFrame, edges: DataFrame,
-                    rounds: Int): DataFrame = {
+                    rounds: Int): DataFrame =
+    relax(seeds, edges.select(col("src"), col("dst"), col("w")), rounds,
+      "dist")
+
+  /** The one relaxation loop: (id, `distCol`) after `rounds` rounds over
+    * (src, dst, w) edges. */
+  private def relax(seeds: DataFrame, edges: DataFrame, rounds: Int,
+                    distCol: String): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     import graft.functions.Checkpoints
-    val e = Checkpoints.cut(
-      edges.select(col("src"), col("dst"), col("w")).repartition(col("src")))
-    var dist = Checkpoints.cut(seeds.select(col("id"), lit(0L).as("dist")))
-    for (_ <- 1 to rounds) {
+    val e = Checkpoints.cut(edges.repartition(col("src")))
+    Checkpoints.iterate(seeds.select(col("id"), lit(0L).as(distCol)), rounds,
+        inputs = Seq(e)) { dist =>
       val step = e.join(dist, col("src") === col("id"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      // same lazy-round rule as [[hops]] (exchange reuse covers the
-      // double reference; reliable profile keeps per-round checkpoints)
-      dist = Checkpoints.rotateIfReliable(
-        dist.unionByName(step)
-          .groupBy(col("id")).agg(min(col("dist")).as("dist")),
-        prev = dist)
+        .select(col("dst").as("id"), (col(distCol) + col("w")).as(distCol))
+      dist.unionByName(step)
+        .groupBy(col("id")).agg(min(col(distCol)).as(distCol))
     }
-    if (dist.sparkSession.conf
-        .get(Checkpoints.ReliableConfKey, "false").toBoolean)
-      Checkpoints.release(e)  // lazy local rounds still read e
-    dist
   }
 }

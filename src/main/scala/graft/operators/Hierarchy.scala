@@ -25,12 +25,13 @@ import org.apache.spark.sql.functions._
   * unsettled frontier shrinks as chains resolve, so late rounds touch a
   * sliver of the node set.
   *
-  * Lineage discipline: the per-round plan is self-referential, so each
-  * round ends in `localCheckpoint` (the [[graft.functions.Components]]
-  * propagation-loop lesson — persist alone doubles the analysis tree per
-  * round until the driver OOMs). Convergence is checked with a count on
-  * the unsettled frontier (one action per round, log-many rounds total —
-  * not a per-row driver loop).
+  * Lineage discipline: the per-round plan is self-referential, so the
+  * rounds run on the counted loop driver
+  * [[graft.functions.Checkpoints.iterateCounted]], which cuts every round
+  * (the [[graft.functions.Components]] propagation-loop lesson — persist
+  * alone doubles the analysis tree per round until the driver OOMs).
+  * Convergence is read from the counts that cut's job folds (one action
+  * per round, log-many rounds total — not a per-row driver loop).
   *
   * Cycle safety: rows on a parent cycle (malformed input — no root is
   * reachable) never settle; after `maxIter` rounds they are dropped and
@@ -61,54 +62,44 @@ object Hierarchy {
         when(col(parentCol).isNull, 0L).otherwise(1L).as("depth"),
         col(parentCol).isNull.as("settled"))
     import graft.functions.{Checkpoints, Escalation}
-    // one-job materialize+count; state row count stays n every round
-    // (settled ∪ jumped partitions the node set — t_id is unique, so the
-    // left join is multiplicity-1), so n both seeds the loop and gates
-    // the per-round broadcast below
-    // one-job materialize + BOTH counts (round 13): total n gates the
-    // per-round broadcast, settled count derives the frontier — the old
-    // separate filtered count() doubled each round's driver round-trips
-    val (state0, n, settled0) = Checkpoints.cutCountedFlag(init, "settled")
-    var state = state0
-    var frontier = n - settled0
-    var iter = 0
-    var progressing = true
-    while (frontier > 0 && progressing && iter < maxIter) {
-      // compose pointers: s.anc -> t means s's new ancestor is t.anc at
-      // distance s.depth + t.depth. Only the unsettled frontier joins
-      // (the left side shrinks every round); the lookup side must be the
-      // FULL state — a frontier row's ancestor may itself be settled.
-      // The lookup side is broadcast while it fits (driver-known count —
-      // a checkpoint's LogicalRDD has no stats, so neither Catalyst nor
-      // AQE can avoid the per-round exchanges themselves; see
-      // Escalation.bcastIfSmall): the round then runs as one
-      // checkpoint-read stage, no shuffle, falling back to the SMJ plan
-      // the moment the hierarchy outgrows the cap.
-      val s = state.filter(!col("settled")).as("s")
-      val t = Escalation.bcastIfSmall(
-        state.select(col("id").as("t_id"), col("anc").as("t_anc"),
-          col("depth").as("t_depth"), col("settled").as("t_settled")), n)
-      val jumped = s.join(t, col("s.anc") === col("t_id"), "left").select(
-        col("s.id").as("id"),
-        col("t_anc").as("anc"),
-        (col("s.depth") + col("t_depth")).as("depth"),
-        coalesce(col("t_settled"), lit(false)).as("settled"))
-      val (stateCp, rows, settledN) = Checkpoints.rotateCountedFlag(
-        state.filter(col("settled")).unionByName(jumped), prev = state,
-        flagCol = "settled")
-      state = stateCp
-      val next = rows - settledN
+    // every round is one counted cut: its row count n (settled ∪ jumped
+    // partitions the node set — t_id is unique, so the left join is
+    // multiplicity-1 — so n holds every round) gates the broadcast below,
+    // and its settled count gives the frontier
+    def frontier(r: Checkpoints.Counted[_]) = r.rows - r.flagged
+    val end = Checkpoints.iterateCounted(init, maxIter, Some("settled"))(
+      step = { prev =>
+        // compose pointers: s.anc -> t means s's new ancestor is t.anc at
+        // distance s.depth + t.depth. Only the unsettled frontier joins
+        // (the left side shrinks every round); the lookup side must be
+        // the FULL state — a frontier row's ancestor may itself be
+        // settled. The lookup side is broadcast while it fits
+        // (driver-known count — a checkpoint's LogicalRDD has no stats,
+        // so neither Catalyst nor AQE can avoid the per-round exchanges
+        // themselves; see Escalation.bcastIfSmall): the round then runs as
+        // one checkpoint-read stage, no shuffle, falling back to the SMJ
+        // plan the moment the hierarchy outgrows the cap.
+        val state = prev.frame
+        val s = state.filter(!col("settled")).as("s")
+        val t = Escalation.bcastIfSmall(
+          state.select(col("id").as("t_id"), col("anc").as("t_anc"),
+            col("depth").as("t_depth"), col("settled").as("t_settled")),
+          prev.rows)
+        val jumped = s.join(t, col("s.anc") === col("t_id"), "left").select(
+          col("s.id").as("id"),
+          col("t_anc").as("anc"),
+          (col("s.depth") + col("t_depth")).as("depth"),
+          coalesce(col("t_settled"), lit(false)).as("settled"))
+        state.filter(col("settled")).unionByName(jumped)
+      },
       // the settled set is monotone (depth ≤ 2^k resolves by round k), so
       // an unchanged frontier means only cycle/dangling rows remain —
-      // stop now instead of burning the remaining maxIter rounds
-      progressing = next < frontier
-      frontier = next
-      iter += 1
-    }
-    if (frontier > 0) onUnresolved(frontier)
-    val out = state.filter(col("settled"))
+      // stop then instead of burning the remaining maxIter rounds
+      done = (prev, cur) => frontier(cur) == 0 ||
+        prev.exists(p => frontier(cur) >= frontier(p)))
+    if (frontier(end) > 0) onUnresolved(frontier(end))
+    end.frame.filter(col("settled"))
       .select(col("id"), col("anc").as("root"), col("depth"))
-    out
   }
 
   /** Ancestor transitive closure — every (descendant, ancestor) pair
@@ -150,8 +141,8 @@ object Hierarchy {
     // P = the exact 2^k-step pointer. k = 0 ⇒ A holds self-pairs only.
     //
     // Round 12 shape: A is kept as a LIST of per-round checkpointed
-    // blocks instead of one re-checkpointed union — the old
-    // `rotate(a ∪ lifted)` re-MATERIALIZED the whole closure every round
+    // blocks instead of one re-checkpointed union — re-cutting a ∪ lifted
+    // every round re-MATERIALIZED the whole closure each time
     // (Σₖ|Aₖ| ≈ log·|closure| block writes); appending only the new
     // lifted block writes each closure pair exactly once. The P side is
     // broadcast while it fits (driver-known count; checkpoints carry no
@@ -160,41 +151,39 @@ object Hierarchy {
     // past the cap. Total pinned storage is unchanged (the closure).
     import graft.functions.{Checkpoints, Escalation}
     var parts = List(Checkpoints.cut(self))
-    var (p, pSize) = Checkpoints.cutCounted(step)
+    var p = Checkpoints.cutCounted(step)
     var iter = 0
-    while (pSize > 0 && iter < maxIter) {
+    while (p.rows > 0 && iter < maxIter) {
       // v -(2^k)-> mid -(d < 2^k)-> anc  ⇒  v -(2^k + d)-> anc, covering
       // exactly the new distance block [2^k, 2^{k+1}) once per pair (the
       // d = 0 self-pair contributes the bare 2^k jump itself)
       val pJump = Escalation.bcastIfSmall(
-        p.select(col("descd"), col("anc").as("mid")), pSize)
+        p.frame.select(col("descd"), col("anc").as("mid")), p.rows)
       val p2 = pJump
-        .join(p.select(col("descd").as("mid"), col("anc")), "mid")
+        .join(p.frame.select(col("descd").as("mid"), col("anc")), "mid")
         .select(col("descd"), col("anc"))
-      val prevP = p
       val a = parts.reduceLeft(_ unionByName _)
       val lifted = pJump
         .join(a.select(col("descd").as("mid"), col("anc")), "mid")
         .select(col("descd"), col("anc"))
-      val (pCp, pNext) = Checkpoints.cutCounted(p2)
-      p = pCp
+      val next = Checkpoints.cutCounted(p2)
       // acyclic input ⇒ |P| strictly shrinks while nonempty (see scaladoc);
       // a plateau is a parent cycle — fail before the lifted block of
       // wrapped pairs is ever materialized
-      if (pNext >= pSize)
+      if (next.rows >= p.rows)
         throw new IllegalArgumentException(
           s"ancestorClosure: parent cycle detected (2^$iter-step pointer " +
-            s"count $pSize -> $pNext did not shrink); input must be acyclic")
-      val liftedCp = Checkpoints.cut(lifted)
-      parts = liftedCp :: parts
-      Checkpoints.release(prevP)
-      pSize = pNext
+            s"count ${p.rows} -> ${next.rows} did not shrink); input must " +
+            "be acyclic")
+      parts = Checkpoints.cut(lifted) :: parts
+      Checkpoints.release(p.frame)
+      p = next
       iter += 1
     }
     // the returned plan reads ONLY the part blocks — the final P pointer
     // (empty on normal exit) is dead weight; free it rather than pinning
     // an extra frame for the session (r12 ADVICE)
-    Checkpoints.release(p)
+    Checkpoints.release(p.frame)
     parts.reduceLeft(_ unionByName _)
   }
 

@@ -107,6 +107,12 @@ object PortalSync {
     * `$where`-ready predicate `"<watermarkCol> >= <literal>"`.
     * Returns the refreshed cache frame (reading the parquet copy).
     * Holds the [[withCacheLock]] single-writer lock for the duration.
+    *
+    * Precondition: `watermarkCol` must not decrease across deltas — every
+    * row a later refresh should merge is stamped at or past the cache's
+    * high-water mark. A row stamped below it (a source that hands batches
+    * over out of order) fails the predicate and is never merged, new key
+    * or not; such a source needs a full re-fetch, not a delta.
     */
   def refresh(spark: SparkSession, cachePath: String, keys: Seq[String],
               watermarkCol: String, fetchFull: () => DataFrame,

@@ -7,13 +7,15 @@ import org.apache.spark.sql.functions._
 /** The r6-measured leak: a k-round iterative loop that `localCheckpoint`s
   * per round strands k state frames in storage memory (q202 bench repeats
   * grew 1.4 s → 5.6 s). These tests pin the fix at both layers — the
-  * [[Checkpoints]] primitives free exactly the superseded blocks, and the
-  * refactored iterative operators pin O(1) frames regardless of round
-  * count (asserted against `sparkContext.getPersistentRDDs`, the storage
-  * registry the blocks live in). Exception: `ancestorClosure` returns a
-  * union of per-round blocks and therefore pins O(log depth) FRAMES whose
-  * total bytes equal the closure — the O(1)-frames rule bounds storage,
-  * and that bound is unchanged.
+  * [[Checkpoints]] cut and its two loop drivers ([[Checkpoints.iterate]],
+  * [[Checkpoints.iterateCounted]]) free exactly the superseded blocks, and
+  * the iterative operators built on them pin O(1) frames regardless of
+  * round count (asserted against `sparkContext.getPersistentRDDs`, the
+  * storage registry the blocks live in). Exception: `ancestorClosure`
+  * returns a union of per-round blocks and therefore pins O(log depth)
+  * FRAMES whose total bytes equal the closure — the O(1)-frames rule
+  * bounds storage, and that bound is unchanged. `ReliableProfileSpec`
+  * runs the same operators on the reliable profile.
   */
 class CheckpointsSpec extends SparkSpec {
 
@@ -36,17 +38,73 @@ class CheckpointsSpec extends SparkSpec {
     assert(!persistedIds.contains(ids.head))
   }
 
-  test("rotate frees the predecessor and keeps the successor usable") {
+  test("cutCounted folds rows and flagged rows into its one job") {
+    import spark.implicits._
+    val df = Seq(Some(true), Some(false), None, Some(true), Some(true))
+      .toDF("f")
+    val (c, jobs) = graft.JobCount(spark)(
+      Checkpoints.cutCounted(df, Some("f")))
+    // a null flag counts as false
+    assert((c.rows, c.flagged) == (5L, 3L))
+    assert(jobs == 1, s"counted cut started $jobs jobs")
+    assert(Checkpoints.cutCounted(df).flagged == 0L)
+    intercept[IllegalArgumentException] {
+      Checkpoints.cutCounted((1 to 3).toDF("n"), Some("n"))
+    }
+    Checkpoints.release(c.frame)
+  }
+
+  test("counted driver frees each superseded round") {
     import spark.implicits._
     sweep()
-    var state = Checkpoints.cut((1 to 10).toDF("n"))
-    val firstId = Checkpoints.checkpointRddIds(state).head
-    for (_ <- 1 to 4)
-      state = Checkpoints.rotate(state.withColumn("n", $"n" + 1), state)
+    var firstId = -1
+    var seen = List.empty[Long]
+    val end = Checkpoints.iterateCounted((1 to 10).toDF("n"), 4)(
+      step = { prev =>
+        if (firstId < 0) firstId = Checkpoints.checkpointRddIds(prev.frame).head
+        seen ::= prev.rows
+        prev.frame.withColumn("n", $"n" + 1).filter($"n" <= 10)
+      })
     assert(!persistedIds.contains(firstId), "superseded checkpoint leaked")
     // only the final round's frame is pinned
-    assert(Checkpoints.checkpointRddIds(state).forall(persistedIds.contains))
-    assert(state.agg(min($"n")).as[Int].head() == 5)
+    assert(persistedIds == Checkpoints.checkpointRddIds(end.frame).toSet)
+    // each step saw the previous round's count; the last round's is kept
+    assert(seen.reverse == Seq(10L, 9L, 8L, 7L) && end.rows == 6L)
+    assert(end.frame.agg(min($"n")).as[Int].head() == 5)
+    sweep()
+  }
+
+  test("counted driver: the stop test sees each round's counts, and a " +
+    "bound of 0 returns init cut") {
+    import spark.implicits._
+    sweep()
+    val tests = scala.collection.mutable.Buffer.empty[(Option[Long], Long)]
+    val end = Checkpoints.iterateCounted(
+      (1 to 8).toDF("n").withColumn("odd", $"n" % 2 === 1), 10,
+      Some("odd"))(
+      step = prev => prev.frame.filter($"n" < 5 || !$"odd"),
+      done = { (prev, cur) =>
+        tests += ((prev.map(_.flagged), cur.flagged))
+        prev.exists(_.flagged == cur.flagged)
+      })
+    assert(tests == Seq((None, 4L), (Some(4L), 2L), (Some(2L), 2L)))
+    assert(end.rows == 6L)
+    val init = Checkpoints.iterateCounted((1 to 3).toDF("n"), 0)(
+      step = _ => fail("a bound of 0 runs no step"))
+    assert(init.rows == 3L && Checkpoints.checkpointRddIds(init.frame).nonEmpty)
+    sweep()
+  }
+
+  test("fixed-round driver stays lazy on the local profile") {
+    import spark.implicits._
+    sweep()
+    val (out, jobs) = graft.JobCount(spark)(
+      Checkpoints.iterate((1 to 10).toDF("n"), 6)(_.withColumn("n", $"n" + 1)))
+    // init is cut (one job); the rounds are not
+    assert(jobs == 1, s"fixed-round driver started $jobs jobs")
+    assert(persistedIds == Checkpoints.checkpointRddIds(out).toSet)
+    assert(out.agg(min($"n")).as[Int].head() == 7)
+    sweep()
   }
 
   test("release on a never-checkpointed frame is a no-op") {
@@ -56,48 +114,50 @@ class CheckpointsSpec extends SparkSpec {
 
   test("reliable mode without a checkpoint dir fails fast") {
     import spark.implicits._
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
     spark.conf.set(Checkpoints.ReliableConfKey, "true")
     try intercept[IllegalArgumentException] {
       Checkpoints.cut((1 to 3).toDF("n"))
     } finally spark.conf.unset(Checkpoints.ReliableConfKey)
   }
 
-  test("reliable mode with a checkpoint dir writes a recoverable checkpoint") {
+  test("reliable mode with a checkpoint dir writes a recoverable " +
+    "checkpoint") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    spark.conf.set(Checkpoints.ReliableConfKey, "true")
-    try {
-      val cp = Checkpoints.cut((1 to 20).toDF("n"))
-      assert(cp.count() == 20)
-      assert(cp.queryExecution.analyzed.collectLeaves().nonEmpty)
-    } finally {
-      spark.conf.unset(Checkpoints.ReliableConfKey)
+    org.apache.spark.ReliableProfile(spark) { dir =>
+      val computed = spark.sparkContext.longAccumulator("computed")
+      val ds = spark.range(20).map { x => computed.add(1); x }
+      val (c, jobs) = graft.JobCount(spark)(Checkpoints.cutCounted(ds))
+      // the fold job, then Spark's write job reading the persisted rows
+      assert(jobs == 2, s"reliable counted cut started $jobs jobs")
+      assert(computed.value == 20L, "reliable cut computed its input twice")
+      assert(c.rows == 20L && c.frame.count() == 20L)
+      assert(org.apache.spark.ReliableProfile.rddDirs(dir) ==
+        Checkpoints.checkpointRddIds(c.frame).map("rdd-" + _).toSet)
+      val (_, cutJobs) = graft.JobCount(spark)(Checkpoints.cut(ds))
+      assert(cutJobs == 2, s"reliable cut started $cutJobs jobs")
     }
   }
 
-  test("reliable rotate deletes the superseded round's checkpoint FILES " +
-    "(cluster profile: no durable-storage accumulation)") {
+  // cluster profile: no durable-storage accumulation
+  test("reliable drivers delete superseded round files") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-rot")
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    spark.conf.set(Checkpoints.ReliableConfKey, "true")
-    def rddDirs: Seq[String] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) :+ f else Seq(f)
-      walk(dir.toFile).filter(_.getName.startsWith("rdd-")).map(_.getName)
-    }
-    try {
-      var state = Checkpoints.cut((1 to 10).toDF("n"))
-      for (_ <- 1 to 4)
-        state = Checkpoints.rotate(state.withColumn("n", $"n" + 1), state)
-      // only the live round's files remain; 4 superseded dirs are gone
-      assert(rddDirs.size == 1,
-        s"superseded checkpoint files leaked: $rddDirs")
+    org.apache.spark.ReliableProfile(spark) { dir =>
+      def live(ds: org.apache.spark.sql.Dataset[_]) =
+        Checkpoints.checkpointRddIds(ds).map("rdd-" + _).toSet
+      val input = Checkpoints.cut((1 to 10).toDF("d"))
+      val fixed = Checkpoints.iterate((1 to 10).toDF("n"), 4,
+        inputs = Seq(input))(_.withColumn("n", $"n" + 1))
+      // only the live round's files remain: 4 superseded round dirs and
+      // the released input are gone
+      assert(org.apache.spark.ReliableProfile.rddDirs(dir) == live(fixed))
       // the survivor is still fully readable (its files were not touched)
-      assert(state.agg(min($"n")).as[Int].head() == 5)
-    } finally {
-      spark.conf.unset(Checkpoints.ReliableConfKey)
+      assert(fixed.agg(min($"n")).as[Int].head() == 5)
+      val counted = Checkpoints.iterateCounted((1 to 10).toDF("n"), 4)(
+        prev => prev.frame.withColumn("n", $"n" + 1)).frame
+      assert(org.apache.spark.ReliableProfile.rddDirs(dir) ==
+        live(fixed) ++ live(counted))
+      assert(counted.agg(min($"n")).as[Int].head() == 5)
     }
   }
 
@@ -110,11 +170,11 @@ class CheckpointsSpec extends SparkSpec {
 
     val pr = PageRank.ranks(nodes, edges, iters = 6)
     assert(pr.count() == 6)
-    // CONSTANT in rounds, not O(rounds): on the local profile the rounds
-    // are lazy (rotateIfReliable — round 13), so exactly the three loop
+    // CONSTANT in rounds, not O(rounds): on the local profile the
+    // fixed-round driver keeps the rounds lazy, so exactly the three loop
     // INPUT frames stay pinned (v, edgeDeg, the initial rank frame)
-    // whether the loop ran 6 rounds or 600; the reliable profile rotates
-    // and releases per round as before (covered above)
+    // whether the loop ran 6 rounds or 600; on the reliable profile the
+    // driver cuts and releases per round (ReliableProfileSpec)
     assert(persistedIds.size <= 3,
       s"PageRank pinned ${persistedIds.size} frames after 6 rounds")
     sweep()
@@ -165,26 +225,44 @@ class CheckpointsSpec extends SparkSpec {
     sweep()
   }
 
-  test("q202 peels in one task: a handful of jobs, one pinned frame") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    sweep()
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      // build to action: the peel's eager pair job counts too
-      val rows = graft.SparkEntry.queries("q202_kcore_peel")(
+  /** Spark jobs each iterative query starts at sf0.01, from building its
+    * plan (eager cuts and sizing counts) through `collect()`. A cap is
+    * the count measured before the loop driver replaced the hand-wired
+    * `Checkpoints` calls; a cut policy that adds a materializing job per
+    * round, or a count job beside a cut, shows up here. */
+  private val iterativeJobCaps = Seq(
+    "q100_dedup_components" -> 21,
+    "q143_hierarchy_flatten" -> 13,
+    "q148_subtree_rollup" -> 23,
+    "q155_kmeans_assign" -> 6,
+    "q157_pagerank" -> 25,
+    "q159_bfs_hops" -> 16,
+    "q163_entity_clusters" -> 15,
+    "q185_shortest_path" -> 16,
+    "q202_kcore_peel" -> 4)
+
+  private def jobsToCollect(query: String): Int = {
+    val (rows, jobs) = graft.JobCount(spark) {
+      graft.SparkEntry.queries(query)(
         spark, sfDir.replace("sf0.001", "sf0.01")).collect()
-      org.apache.spark.ListenerBusDrain(sc)
-      assert(rows.nonEmpty)
-      // the distributed rounds ran ~4 jobs per lineage cut (8 cuts)
-      assert(jobs.get <= 6, s"q202 started ${jobs.get} jobs")
-    } finally sc.removeSparkListener(listener)
+    }
+    assert(rows.nonEmpty, s"$query returned no rows")
+    jobs
+  }
+
+  for ((query, cap) <- iterativeJobCaps)
+    test(s"$query starts at most $cap jobs, build through action") {
+      sweep()
+      val jobs = jobsToCollect(query)
+      assert(jobs <= cap, s"$query started $jobs jobs")
+      sweep()
+    }
+
+  test("q202 peels in one task: a handful of jobs, one pinned frame") {
+    sweep()
+    val jobs = jobsToCollect("q202_kcore_peel")
+    assert(jobs <= iterativeJobCaps.toMap.apply("q202_kcore_peel"),
+      s"q202 started $jobs jobs")
     // only the pair list's checkpoint, which the returned plan reads
     assert(persistedIds.size <= 1,
       s"q202 pinned ${persistedIds.size} frames")

@@ -95,9 +95,14 @@ class ComponentsSpec extends SparkSpec {
     val df = pairs.toDF("a", "b")
     val base = Components.connectedComponents(df, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val multi = Components.connectedComponents(df, "a", "b",
-        localEdgeThreshold = 60L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (multiRows, jobs) = graft.JobCount(spark) {
+      Components.connectedComponents(df, "a", "b", localEdgeThreshold = 60L)
+        .collect()
+    }
+    // each of the 4 contraction levels takes its edge count from the job
+    // that cuts it; a separate count job per level would make this 24
+    assert(jobs <= 20, s"multi-level contraction started $jobs jobs")
+    val multi = multiRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(multi == base)
     // hub-linked clusters 0..9 all label 0; isolated clusters keep their min
     assert(multi(hub) == 0L && multi(901L) == 0L && multi(1503L) == 1500L)

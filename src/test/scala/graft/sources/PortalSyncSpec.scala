@@ -89,6 +89,23 @@ class PortalSyncSpec extends SparkSpec {
     assertSame(spark.read.parquet(cache), df(v1))
   }
 
+  test("watermark precondition: a delta row stamped below the cache's " +
+    "high-water mark is not merged") {
+    // a stream sink's call shape: each micro-batch is both the full fetch
+    // (cold cache) and the delta source, filtered by the rendered mark
+    val cache = tmp("psync-batches")
+    def sync(batch: DataFrame): DataFrame =
+      PortalSync.refresh(spark, cache, Seq("id"), "updated_at",
+        fetchFull = () => batch, fetchDelta = pred => batch.where(pred))
+    sync(df(v1))
+    // a batch that arrives out of watermark order: key 5 is new, but its
+    // stamp is below the cache's mark (2020-01-03), so `>=` drops it
+    val late = (5L, "epsilon", "2020-01-02T12:00:00")
+    val merged = sync(df(Seq(late, (6L, "zeta", "2020-01-06T00:00:00"))))
+    assert(merged.select("id").as[Long].collect().toSet ==
+      Set(1L, 2L, 3L, 6L))
+  }
+
   /** Loopback SODA server over a mutable row set, with a tiny `$where`
     * evaluator for the one predicate shape the sync emits:
     * `col >= 'literal'`. Records every request's query params.
