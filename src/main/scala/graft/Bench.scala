@@ -1,133 +1,44 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Scale-factor suffix parsed from a fixture path: the LAST sf<digits>
     * match, not the first — a path like /data/sf0.1-backup/testdata-sf1
-    * names the sf1 fixture, and taking the first match would misfile an
-    * sf1 run over the sf0.1 ledger, exactly the clobber the routing
-    * exists to prevent. "0" when no match (routes away from the ledger).
+    * names the sf1 fixture, and taking the first match would overwrite
+    * the sf0.1 ledger with an sf1 run. "0" when no match.
     */
   def parseSf(sfDir: String): String =
     """sf([0-9.]+)""".r.findAllMatchIn(sfDir)
       .map(_.group(1)).toSeq.lastOption.getOrElse("0")
 
-  /** How much slower than the pinned run's calibration probe a run's
-    * probe may be and still count as "the known fast band". Observed
-    * slow phases inflate pure-CPU work ×1.18–1.35 uniformly; 1.15 sits
-    * under the slowest observed phase and over probe jitter (<±5% on a
-    * quiet host). */
-  val CalibTolerance = 1.15
-
-  /** Ledger-file routing for a finished run — pure, spec'd
-    * (BenchLedgerSpec). The pinned BENCH_LOCAL.json's contract is
-    * "quiet-machine fast-phase median-of-N at sf0.1"; three clobber
-    * classes each cost a restore commit before the guards existed:
+  /** The ledger file a finished run writes — pure, spec'd
+    * (BenchLedgerSpec). Every file is overwrite-latest: it holds the full
+    * line of the last run of its kind; tools/bench_compare.py compares
+    * any two such lines per query.
     *
-    *  1. wrong scale (r6/r7): any non-sf0.1 run → BENCH_LOCAL_sf<N>.json
-    *     (suffix from the PARSED sf, not the dir basename — the sf1
-    *     fixture dir "testdata-sf1" would dodge the ignore pattern);
-    *  2. stalled machine (r2 c78ef12, r7): spread_bp > 3000 (min→max band
-    *     over 30% of the median total) → BENCH_LOCAL_noisy.json;
-    *  3. slow host phase (r8, tightened at the r9 close-out): the host
-    *     alternates fast/slow phases (identical code measured 52.8 s
-    *     then 70–78 s minutes apart) and a slow phase can be UNIFORMLY
-    *     slow — quieter spread, worse total — so spread alone cannot
-    *     arbitrate. ANY total worse than the pinned one →
-    *     BENCH_LOCAL_noisy.json, unless `force`. The original >1.15×
-    *     tolerance let CONSECUTIVE slow-phase runs ratchet the pin up
-    *     15% at a time (observed: 52.3 → 59.2 → 62.5 on identical
-    *     sf0.1 plans, both runs uniformly ×1.18 incl. scan-free
-    *     queries); a worse-but-quiet run adds no information over the
-    *     existing pin, and a code change that genuinely slows the suite
-    *     is exactly what SPARK_GRAFT_BENCH_FORCE=1 is for (force does
-    *     not bypass the sf or spread gates).
-    *  4. phase-labeled diverts (round 11, VERDICT item 2): every run
-    *     times two fixed probes ([[calibProbe]] CPU, [[calibProbeMem]]
-    *     bandwidth) before and after the pass and records both pairs in
-    *     the ledger line, so the host phase is labeled by measurement.
-    *     The probes refine the DIVERT evidence, not the acceptance:
-    *     under rule 3 only totals ≤ the pin can ever pin, and a faster
-    *     total measured under SLOW probes is the most conservative,
-    *     most reproducible pin possible ("even in a slower host state
-    *     the code beat the old pin") — blocking it was measured to
-    *     reject a genuine 50.8 s improvement against a 52.3-era pin
-    *     whose straddle into an anomalous 713 ms probe floor made the
-    *     band unreachable (r11). So: a WORSE total with out-of-band
-    *     probes diverts as "slow host phase, measured directly"; a
-    *     worse total with IN-BAND probes diverts with a
-    *     likely-real-regression escalation (the phase excuse is
-    *     measured away). Accepted pins always record their own probe
-    *     pairs as the next band.
+    *  - a run where any query failed every repeat measured less than the
+    *    whole surface → BENCH_LOCAL_invalid.json, with an INVALID note
+    *    (checked first);
+    *  - a genuinely distributed master (`distributed`, see
+    *    [[GraftSession.isLocalMaster]]) → BENCH_CLUSTER_sf<N>.json: real
+    *    serialization and transport, a different population from
+    *    in-process runs;
+    *  - otherwise BENCH_LOCAL_sf<N>.json.
     *
-    *  0. failed queries (checked first, `force` included): a run where
-    *     any query failed every repeat measured less than the whole
-    *     surface, so it never pins → BENCH_LOCAL_invalid.json.
-    *
-    * Returns (fileName, optional stderr note).
+    * The suffix is the PARSED scale ([[parseSf]]), so runs at different
+    * scales never overwrite each other. Returns (fileName, optional
+    * stderr note).
     */
-  def ledgerFor(sfNum: String, spreadBp: Long, total: Double,
-                pinnedTotal: Option[Double],
-                force: Boolean,
-                calibMs: Option[Long] = None,
-                pinnedCalibMs: Option[Long] = None,
-                calibMemMs: Option[Long] = None,
-                pinnedCalibMemMs: Option[Long] = None,
-                failed: Seq[String] = Nil)
-      : (String, Option[String]) = {
-    // calibration dimensions with both sides measured (CPU fold, then the
-    // memory/shuffle-bandwidth probe — the dimension the r11 forensics
-    // showed actually moves; BASELINE §4.0e)
-    val compared = Seq(
-      ("cpu", calibMs, pinnedCalibMs),
-      ("mem", calibMemMs, pinnedCalibMemMs)).collect {
-      case (dim, Some(c), Some(p)) => (dim, c, p)
-    }
-    val outOfBand = compared.find {
-      case (_, c, p) => c > CalibTolerance * p }
+  def ledgerFor(sfNum: String, distributed: Boolean, failed: Seq[String])
+      : (String, Option[String]) =
     if (failed.nonEmpty)
       ("BENCH_LOCAL_invalid.json", Some(
         s"INVALID run: ${failed.mkString(",")} failed every run; a run " +
-          "with failures never pins — diverted to BENCH_LOCAL_invalid.json"))
-    else if (sfNum != "0.1") (s"BENCH_LOCAL_sf$sfNum.json", None)
-    else if (spreadBp > 3000)
-      ("BENCH_LOCAL_noisy.json", Some(
-        s"spread_bp=$spreadBp > 3000: noisy run diverted to " +
-          "BENCH_LOCAL_noisy.json; pinned ledger left untouched"))
-    else if (!force && pinnedTotal.exists(v => total > v))
-      ("BENCH_LOCAL_noisy.json", Some(outOfBand match {
-        case Some((dim, c, p)) =>
-          s"run total=$total is over the pinned ledger's AND the [$dim] " +
-            s"probe $c ms is outside the pinned fast band ($p ms × " +
-            s"$CalibTolerance): slow host phase, measured directly; " +
-            "diverted to BENCH_LOCAL_noisy.json (tools/pin_ledger.sh " +
-            "polls for a fast phase)"
-        case None if compared.size == 2 =>
-          s"run total=$total is over the pinned ledger's WITH all " +
-            "calibration probes in the pinned fast band — the host-phase " +
-            "excuse is measured away: if code changed since the pin this " +
-            "is likely a REAL regression; diverted to " +
-            "BENCH_LOCAL_noisy.json, investigate before " +
-            "SPARK_GRAFT_BENCH_FORCE=1"
-        case None if compared.nonEmpty =>
-          // only ONE dimension comparable (e.g. a legacy pin without
-          // calib_mem_ms): the in-band evidence is visibly weaker — the
-          // unmeasured dimension (the one the r11 forensics showed
-          // actually moves) could still be the cause, so no
-          // "measured away" claim (ADVICE r11)
-          s"run total=$total is over the pinned ledger's; the only " +
-            s"comparable probe dimension [${compared.map(_._1).mkString(",")}] " +
-            "is in the pinned fast band, but the other dimension is " +
-            "unmeasured on the pin — possibly a real regression, " +
-            "possibly an unmeasured host phase; diverted to " +
-            "BENCH_LOCAL_noisy.json"
-        case None =>
-          s"run total=$total is over the pinned ledger's (slow host " +
-            "phase): diverted to BENCH_LOCAL_noisy.json; set " +
-            "SPARK_GRAFT_BENCH_FORCE=1 to re-pin deliberately"
-      }))
-    else ("BENCH_LOCAL.json", None)
-  }
+          "with failures is kept apart from the scale ledgers — written " +
+          "to BENCH_LOCAL_invalid.json"))
+    else if (distributed) (s"BENCH_CLUSTER_sf$sfNum.json", None)
+    else (s"BENCH_LOCAL_sf$sfNum.json", None)
 
   /** Headline total over per-query medians — pure, spec'd
     * (BenchTotalSpec). A query whose runs ALL failed carries the -1.0
@@ -137,33 +48,6 @@ object Bench {
     val (failed, ok) = results.partition(_._2 < 0.0)
     (ok.values.sum, failed.keys.toSeq.sorted)
   }
-
-  /** The pinned ledger's total, parsed ANCHORED to the metric field —
-    * pure, spec'd (BenchLedgerSpec). A bare first-"value" regex silently
-    * disabled the slow-phase clobber guard under any field reordering
-    * (ADVICE r8); anchoring plus the caller's loud unparsed-ledger note
-    * keeps the guard's failure mode visible.
-    */
-  def parsePinnedTotal(ledgerLine: String): Option[Double] =
-    """"metric":"total","value":(-?[0-9.eE+]+)""".r
-      .findFirstMatchIn(ledgerLine).map(_.group(1).toDouble)
-
-  /** The pinned ledger's calibration evidence, parsed anchored to the
-    * `calib_ms` field — pure, spec'd (BenchLedgerSpec). Returns the
-    * WORSE (larger) of the pinned run's before/after probe times: the
-    * pin's own upper bound of its quiet state, the reference a new
-    * run's worse probe is compared against. (The first implementation
-    * took the MIN — and a pin whose after-probe straddled into an
-    * anomalous 713 ms floor then labeled every normal 900–960 ms quiet
-    * probe "slow", diverting a genuine 50.8 s improvement; r11.) None
-    * on legacy lines without the field. `field` selects the dimension:
-    * "calib_ms" (CPU fold) or "calib_mem_ms" (bandwidth probe — see
-    * [[calibProbeMem]]). */
-  def parsePinnedCalib(ledgerLine: String,
-                       field: String = "calib_ms"): Option[Long] =
-    ("\"" + field + "\":\\[(\\d+),(\\d+)\\]").r
-      .findFirstMatchIn(ledgerLine)
-      .map(m => math.max(m.group(1).toLong, m.group(2).toLong))
 
   /** Compact per-query encoding for the tail-surviving stdout line —
     * pure, spec'd (BenchLedgerSpec). VERDICT r10 item 3: the decisecond
@@ -203,11 +87,9 @@ object Bench {
     * ADDS time (measured: medians span 980–1220 ms across quiet-host
     * JVMs, ±12%, while a uniformly slow phase inflates even the best
     * round — the r8/r9 phases slowed scan-free queries 1.18–1.22×
-    * uniformly), so the min is the stable capacity signal the 1.15
-    * tolerance needs. ~1 s per round in the fast band at 32 cores: long
-    * enough to ride out scheduler jitter, short enough to poll for a
-    * fast phase (tools/pin_ledger.sh) without meaningfully occupying the
-    * window it detects. */
+    * uniformly), so the min is the stable capacity signal. ~1 s per
+    * round in the fast band at 32 cores: long enough to ride out
+    * scheduler jitter, short enough not to occupy the window it labels. */
   def calibProbe(spark: SparkSession, rounds: Int = 4): Long = {
     import org.apache.spark.sql.functions._
     val p = spark.sparkContext.defaultParallelism
@@ -225,8 +107,8 @@ object Bench {
 
   /** Memory/shuffle-bound calibration probe — the second phase dimension
     * (round 11 forensics, BASELINE §4.0e): the host entered a state where
-    * the shuffle/window-heavy tier ran 1.3–1.8× the pinned values while
-    * [[calibProbe]] stayed flat in its fast band AND the r9-pin-era code
+    * the shuffle/window-heavy tier ran 1.3–1.8× its earlier values while
+    * [[calibProbe]] stayed flat in its fast band AND the r9-era code
     * measured side-by-side was equally inflated — i.e. the slow dimension
     * is memory/shuffle bandwidth, invisible to a pure-CPU fold. This
     * probe is a fixed wide hash aggregation (random access over a
@@ -247,26 +129,6 @@ object Bench {
     once()
     (1 to math.max(1, rounds)).map(_ => once()).min
   }
-
-  /** Consecutive slow-phase diverts already recorded in the noisy ledger
-    * AGAINST THE SAME PIN — pure, spec'd (BenchLedgerSpec). ADVICE r9:
-    * the slow-phase gate diverts ANY worse-than-pin total, so a genuine
-    * code regression could hide behind the phase-noise rationale
-    * indefinitely. The counter rides in the noisy file itself
-    * (`"slow_diverts":N,"slow_diverts_vs":pin`) so no extra state file
-    * exists; a deliberate re-pin changes the `vs` value and resets the
-    * count naturally. The caller increments it on each slow-phase divert
-    * and escalates LOUDLY once it reaches 3 — three consecutive
-    * worse-than-pin totals against one pin is no longer explainable as
-    * a host phase.
-    */
-  def slowDivertCount(noisyLine: String, pinnedTotal: Double): Int =
-    """"slow_diverts":(\d+),"slow_diverts_vs":(-?[0-9.eE+]+)""".r
-      .findFirstMatchIn(noisyLine) match {
-        case Some(m) if m.group(2).toDouble == pinnedTotal =>
-          m.group(1).toInt
-        case _ => 0
-      }
 
   /** Outlier policy for per-query timing — pure, spec'd (BenchLedgerSpec).
     * The bench host alternates fast/slow phases (BASELINE.md): a phase
@@ -306,9 +168,9 @@ object Bench {
     * Scans split at 8 MiB, not the 128 MiB default: the fixtures are
     * single ~1-115 MiB parquet files, so default sizing reads a whole
     * table in ONE task at sf1 (113 MiB lineitem) however many cores the
-    * host has. ≤ sf0.1 the files are single-row-group ≤12 MiB, so pinned
-    * sf0.1 ledgers are unaffected (splits without a row-group midpoint
-    * read nothing).
+    * host has. ≤ sf0.1 the files are single-row-group ≤12 MiB, so sf0.1
+    * timings are unaffected (splits without a row-group midpoint read
+    * nothing).
     */
   val SessionConfs: Seq[(String, String)] = Seq(
     "spark.cleaner.periodicGC.interval" -> "90s",
@@ -327,38 +189,27 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // Distributed-performance profile (round 12, VERDICT item 1): the
     // same env contract as Verify/tools/cluster_gate.sh — a local-cluster
     // master (real executor JVMs, netty shuffle/broadcast transport,
     // executor-fetched app jar) so the perf ledger can be MEASURED under
-    // real serialization, not just local[n]'s in-process exchange. A run
-    // under a non-default master routes to its own BENCH_CLUSTER_sf*.json
-    // ledger below — it must never touch the local[32] pin (the pin's
-    // contract is one fixed config; cluster numbers are a different
-    // population).
-    val masterEnv = sys.env.get("SPARK_GRAFT_MASTER")
+    // real serialization, not just local[n]'s in-process exchange. Such a
+    // run writes its own BENCH_CLUSTER_sf*.json ledger (see ledgerFor); an
+    // explicitly-exported local[*] master stays in-process and local.
+    val distributed =
+      sys.env.get("SPARK_GRAFT_MASTER").exists(!GraftSession.isLocalMaster(_))
     val spark = GraftSession.harness(SessionConfs: _*)
     // Phase calibration (round 11, VERDICT item 2): time the fixed probe
     // BEFORE the warm-up and AFTER the timed pass; both land in every
-    // output line as the run's measured phase label. CALIB_ONLY=1 runs
-    // just the probe and exits — the cheap poll tools/pin_ledger.sh uses
-    // to wait for a fast phase before spending a full ledger run.
-    // Probes are FIXED work sized for the pinned-ledger config (32
-    // cores, ~1 s and ~4.5 s there): at the default local[4] they cost
-    // ~8x that, several silent minutes around a one-minute smoke — so
-    // they default ON only at >=16 cores (pin-config runs; probe values
-    // are only band-comparable at one core count anyway). Env overrides
+    // output line as the run's measured phase label. Probes are FIXED
+    // work sized for 32 cores (~1 s and ~4.5 s there): at the default
+    // local[4] they cost ~8x that, several silent minutes around a
+    // one-minute smoke — so they default ON only at >=16 cores (probe
+    // values are only comparable at one core count anyway). Env overrides
     // both ways: SPARK_GRAFT_CALIB=1 forces on, =0 forces off.
     val calibOn = sys.env.get("SPARK_GRAFT_CALIB")
-      .map(_ != "0").getOrElse(cpus.toInt >= 16)
-    if (sys.env.getOrElse("SPARK_GRAFT_CALIB_ONLY", "0") == "1") {
-      val c = Bench.calibProbe(spark)
-      val m = Bench.calibProbeMem(spark)
-      println(s"""{"metric":"calib","value":$c,"mem_ms":$m,"unit":"ms"}""")
-      spark.stop()
-      return
-    }
+      .map(_ != "0").getOrElse(cpus >= 16)
     val calibBefore = if (calibOn) Bench.calibProbe(spark) else -1L
     val calibMemBefore = if (calibOn) Bench.calibProbeMem(spark) else -1L
     // Iterative operators (PageRank/BFS/k-core/components/…) leave their
@@ -400,7 +251,8 @@ object Bench {
     // A crashed run records -1.0, never a plausible elapsed time; a
     // query's value is the median of its successful runs (-1.0 only if
     // every run failed — then it is left out of the total, named in
-    // `failed`, and the run never pins: see totalOf and ledgerFor).
+    // `failed`, and the run goes to the invalid ledger: see totalOf and
+    // ledgerFor).
     val repeats = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt)
     // Steady-state priming (round 8): each query runs ONCE untimed at the
@@ -473,9 +325,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val totalExtra = runsWithExtra.valuesIterator.map(_._2).sum
     // post-pass probe: a run that STARTED fast but finished slow straddled
-    // a phase boundary — the ledger gate compares the run's WORSE probe
-    // against the pin's WORSE one (its quiet-state upper bound; see
-    // parsePinnedCalib), so straddlers divert too
+    // a phase boundary, visible as a before/after pair that disagrees
     val calibAfter = if (calibOn) Bench.calibProbe(spark) else -1L
     val calibMemAfter = if (calibOn) Bench.calibProbeMem(spark) else -1L
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -486,98 +336,18 @@ object Bench {
         s""""repeats":$repeats,"total_min":$totalMin,"total_max":$totalMax,""" +
         s""""spread_bp":$spreadBp,"calib_ms":$calibJson,""" +
         s""""calib_mem_ms":$calibMemJson,"n_extra":$nExtraJson,""" +
-        s""""runs":$runsJson,"failed":$failedJson,"sf":"$sfDir"}"""
+        s""""runs":$runsJson,"failed":$failedJson,"cpus":$cpus,""" +
+        s""""sf":"$sfDir"}"""
     val sfNum = Bench.parseSf(sfDir)
-    // Full-precision, full-name per-query map → a repo file (the ledger's
-    // source of truth; survives any stdout truncation). Which file gets
-    // this run is [[Bench.ledgerFor]]'s decision — see its scaladoc for
-    // the three clobber classes the routing guards against. The stdout
+    // Full-precision, full-name per-query map → a repo file (survives any
+    // stdout truncation); [[Bench.ledgerFor]] names the file. The stdout
     // lines (what the driver parses) are unaffected by the routing.
-    try if (masterEnv.exists(!GraftSession.isLocalMaster(_))) {
-      // genuinely distributed master (local-cluster / standalone): its
-      // own ledger file, overwrite-latest, no pin interaction — cluster
-      // numbers include real serialization + transport and are not
-      // comparable to the local[32] pin's population
-      // (tools/bench_compare.py compares them deliberately, per query, to
-      // find serialization-sensitive plans). An explicitly-exported
-      // local[*] master does NOT take this branch: in-process numbers
-      // must face the pin's anti-ratchet guards, never clobber the
-      // cluster ledger (round-12 review)
-      val w = new java.io.PrintWriter(s"BENCH_CLUSTER_sf$sfNum.json")
-      try w.println(fullLine) finally w.close()
-    } else {
-      // anchored to the metric, not the first "value": — field reordering
-      // or format drift must not silently disable the slow-phase guard.
-      // A ledger that exists but doesn't parse gets a LOUD stderr note
-      // (the guard then defaults open: first-run-always-pins).
-      val pinExists = new java.io.File("BENCH_LOCAL.json").isFile
-      val pinnedLine =
-        if (!pinExists) None
-        else try {
-          val pinned = scala.io.Source.fromFile("BENCH_LOCAL.json")
-          Some(try pinned.mkString finally pinned.close())
-        } catch { case _: Throwable => None }
-      val pinnedTotal = pinnedLine.flatMap(Bench.parsePinnedTotal)
-      // warn on unreadable AND on read-but-unparseable alike (review
-      // r11: the refactor to pinnedLine had silently dropped the
-      // unreadable case) — either way the guard defaults open
-      if (pinExists && pinnedTotal.isEmpty) System.err.println(
-        "[bench] BENCH_LOCAL.json exists but its total could not be " +
-          "read/parsed (expected \"metric\":\"total\",\"value\":N) — the " +
-          "slow-phase clobber guard is DISABLED for this run")
-      val pinnedCalib = pinnedLine.flatMap(Bench.parsePinnedCalib(_))
-      val pinnedCalibMem =
-        pinnedLine.flatMap(Bench.parsePinnedCalib(_, "calib_mem_ms"))
-      // the gate compares this run's WORSE probe time against the pin's
-      // WORSE one (parsePinnedCalib takes the max of the pinned pair —
-      // its quiet-state upper bound); a disabled probe (-1) gates on
-      // rules 1-3 only
-      val calibWorst =
-        if (calibOn) Some(math.max(calibBefore, calibAfter)) else None
-      val calibMemWorst =
-        if (calibOn) Some(math.max(calibMemBefore, calibMemAfter)) else None
-      val force = sys.env.getOrElse("SPARK_GRAFT_BENCH_FORCE", "0") == "1"
-      val (ledger, note) = Bench.ledgerFor(
-        sfNum, spreadBp, total, pinnedTotal, force, calibWorst, pinnedCalib,
-        calibMemWorst, pinnedCalibMem, failed)
-      note.foreach(n => System.err.println(s"[bench] $n"))
-      // slow-phase diverts carry a consecutive-divert counter in the
-      // written line (see Bench.slowDivertCount) — 3 in a row against
-      // the same pin escalates from "host phase" to "likely regression"
-      // (noisy + quiet spread) can only come from ledgerFor's worse-
-      // than-pin branch, so no calibration re-check belongs here — a
-      // duplicate of rule 4's logic could silently drift from it
-      val slowPhase = ledger == "BENCH_LOCAL_noisy.json" &&
-        spreadBp <= 3000 && pinnedTotal.exists(total > _)
-      def prevDiverts: Int = try {
-        val src = scala.io.Source.fromFile("BENCH_LOCAL_noisy.json")
-        try Bench.slowDivertCount(src.mkString, pinnedTotal.getOrElse(-1.0))
-        finally src.close()
-      } catch { case _: Throwable => 0 }
-      val lineOut =
-        if (slowPhase) {
-          val n = prevDiverts + 1
-          if (n >= 3) System.err.println(
-            s"[bench] $n CONSECUTIVE runs totaled worse than the pinned " +
-              "ledger against the same pin — no longer explainable as a " +
-              "host phase. If code changed since the pin this is likely " +
-              "a REAL regression: investigate, then re-pin deliberately " +
-              "with SPARK_GRAFT_BENCH_FORCE=1")
-          fullLine.dropRight(1) +
-            s""","slow_diverts":$n,"slow_diverts_vs":${pinnedTotal.get}}"""
-        } else if (ledger == "BENCH_LOCAL_noisy.json" &&
-            pinnedTotal.isDefined && prevDiverts > 0)
-          // ADVICE r10: a spread-noisy run between slow-phase diverts must
-          // CARRY the counter forward unchanged, not overwrite it away —
-          // alternating noise classes could otherwise reset the 3-divert
-          // escalation indefinitely and hide a real regression
-          fullLine.dropRight(1) +
-            s""","slow_diverts":$prevDiverts,""" +
-            s""""slow_diverts_vs":${pinnedTotal.get}}"""
-        else fullLine
-      val w = new java.io.PrintWriter(ledger)
-      try w.println(lineOut) finally w.close()
-    } catch { case _: Throwable => () }
+    val (ledger, note) = Bench.ledgerFor(sfNum, distributed, failed)
+    note.foreach(n => System.err.println(s"[bench] $n"))
+    try java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(ledger), fullLine + "\n")
+    catch { case NonFatal(e) => System.err.println(
+      s"[bench] ledger write to $ledger failed: ${e.getMessage}") }
     // The harness that wraps this main keeps only the TAIL of stdout
     // (observed: last 2000 chars), and the full 210-query line is ~19 KB —
     // it gets beheaded and never parses. So the LAST line printed is a

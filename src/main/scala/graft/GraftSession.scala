@@ -59,8 +59,8 @@ object GraftSession {
     * (`local-cluster[...]`, `spark://`, `yarn`, ...). Used by Bench's
     * ledger routing: only a genuinely distributed run may write the
     * cluster ledger, so an explicitly-exported `SPARK_GRAFT_MASTER=
-    * local[32]` still faces the local pin's anti-ratchet guards instead
-    * of silently clobbering BENCH_CLUSTER numbers with in-process ones.
+    * local[32]` writes the local ledger instead of silently clobbering
+    * BENCH_CLUSTER numbers with in-process ones.
     */
   def isLocalMaster(master: String): Boolean =
     master == "local" || master.matches("""local\[[^\]]*\]""")

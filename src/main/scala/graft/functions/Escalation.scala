@@ -140,41 +140,19 @@ object Escalation {
     if (estSplits * 2 < cores) df.repartition(cores) else df
   }
 
-  /** Driver-count-gated broadcast hint for iterative loops (round 12).
-    *
-    * Every loop frame here is a checkpoint (`LogicalRDD`), whose
-    * size-in-bytes stat is the catch-all default — Catalyst therefore
-    * NEVER plans a broadcast join inside a loop, and even AQE's runtime
-    * SMJ→BHJ conversion still pays the exchange it converted (the shuffle
-    * is materialized before stats exist). The loops, however, KNOW their
-    * frame sizes — the counted loop driver [[Checkpoints.iterateCounted]]
-    * hands each step the previous round's row count, folded in the job
-    * that materialized it — so the strategy choice the optimizer can't
-    * make from stats is made here from exact runtime counts: hint
-    * broadcast while the side fits, fall back to the unhinted (shuffle)
-    * plan the moment it doesn't. Scale-adaptive by construction — a
-    * 100 TB corpus's frontiers exceed the cap and take the exchange path;
-    * the cap itself is a conf knob, not a constant tuned to the fixture.
-    *
-    * The cap is a BYTE budget, expressed as rows × bytesPerRow: the
-    * default 1M-row cap assumes the ≤48 B/row unsafe layout of the
-    * 2-4-long frames every current loop passes, i.e. ≤48 MB broadcast —
-    * inside the 64 MiB autoBroadcastJoinThreshold [[graft.GraftSession]]
-    * already endorses for dimension tables. A call site with wide rows
-    * (arrays/strings) MUST pass its own `bytesPerRow` estimate so the
-    * row cap scales down instead of silently OOMing the driver
-    * (r12 ADVICE).
-    *
-    * `rows < 0` means "unknown" and never broadcasts.
+  /** Broadcast hint for a loop frame of known row count (round 12).
+    * Loop frames are checkpoints (`LogicalRDD`) without a size stat, so
+    * Catalyst never broadcasts them on its own; the counted loop
+    * [[Checkpoints.iterateCounted]] hands each step the exact row count
+    * instead. The cap: every caller passes a 2-4-long frame (≤48 B/row),
+    * so 1M rows is ≤48 MB — inside the 64 MiB autoBroadcastJoinThreshold
+    * [[graft.GraftSession]] endorses for dimension tables. `rows < 0`
+    * means unknown and never broadcasts.
     */
-  val BroadcastMaxRowsKey = "graft.broadcast.maxRows"
+  val BroadcastMaxRows = 1000000L
 
-  def bcastIfSmall(df: DataFrame, rows: Long, bytesPerRow: Int = 48): DataFrame = {
-    require(bytesPerRow > 0, s"bytesPerRow must be positive: $bytesPerRow")
-    val capRows = confInt(df.sparkSession, BroadcastMaxRowsKey, 1000000)
-    val capBytes = capRows.toLong * 48L
-    if (rows >= 0 && rows * bytesPerRow.toLong <= capBytes)
+  def bcastIfSmall(df: DataFrame, rows: Long): DataFrame =
+    if (rows >= 0 && rows <= BroadcastMaxRows)
       org.apache.spark.sql.functions.broadcast(df)
     else df
-  }
 }

@@ -2,9 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench-ledger routing cost three restore commits (r2, r7, r8)
-  * before it was extracted to a pure function — these pin the three
-  * clobber classes and the re-pin override.
+/** Bench's pure pieces: the ledger-file routing, the scale parse, the
+  * outlier policy and the compact stdout encoding.
   */
 class BenchLedgerSpec extends AnyFunSuite {
 
@@ -18,60 +17,19 @@ class BenchLedgerSpec extends AnyFunSuite {
   }
 
   test("non-sf0.1 runs land in their own suffixed file") {
-    assert(Bench.ledgerFor("0.001", 100L, 30.0, Some(50.0), force = false)
-      ._1 == "BENCH_LOCAL_sf0.001.json")
-    assert(Bench.ledgerFor("1", 100L, 500.0, Some(50.0), force = false)
-      ._1 == "BENCH_LOCAL_sf1.json")
-    // and never produce a note (expected routing, not a diversion)
-    assert(Bench.ledgerFor("0.001", 100L, 30.0, Some(50.0), force = false)
-      ._2.isEmpty)
-  }
-
-  test("a stalled-machine run (spread_bp > 3000) is diverted with a note") {
-    val (file, note) =
-      Bench.ledgerFor("0.1", 3001L, 45.0, Some(50.0), force = false)
-    assert(file == "BENCH_LOCAL_noisy.json")
-    assert(note.exists(_.contains("spread_bp=3001")))
-    // boundary: exactly 3000 still pins
-    assert(Bench.ledgerFor("0.1", 3000L, 45.0, Some(50.0), force = false)
-      ._1 == "BENCH_LOCAL.json")
-  }
-
-  test("any run worse than the pinned total is diverted even when its " +
-    "spread is quiet (no slow-phase ratchet)") {
-    // the r8 clobber: 71.4 s / 2541 bp replaced a 52.8 s / 2668 bp pin
-    // because spread alone arbitrated
-    val (file, note) =
-      Bench.ledgerFor("0.1", 2541L, 71.35, Some(52.79), force = false)
-    assert(file == "BENCH_LOCAL_noisy.json")
-    assert(note.exists(_.contains("slow host phase")))
-    // the r9 ratchet: a worse-but-within-15% run used to REPLACE the pin,
-    // so consecutive slow-phase runs walked it 52.3 → 59.2 → 62.5 on
-    // identical plans; any worse total now diverts
-    assert(Bench.ledgerFor("0.1", 2541L, 60.0, Some(52.79), force = false)
-      ._1 == "BENCH_LOCAL_noisy.json")
-    // equal-or-better still pins
-    assert(Bench.ledgerFor("0.1", 2541L, 52.79, Some(52.79), force = false)
-      ._1 == "BENCH_LOCAL.json")
-    // no pinned ledger yet → first run always pins
-    assert(Bench.ledgerFor("0.1", 2541L, 71.35, None, force = false)
-      ._1 == "BENCH_LOCAL.json")
-  }
-
-  test("force re-pins over the slow-phase guard but NOT over the sf or " +
-    "spread gates") {
-    assert(Bench.ledgerFor("0.1", 1500L, 100.0, Some(50.0), force = true)
-      ._1 == "BENCH_LOCAL.json")
-    assert(Bench.ledgerFor("0.1", 3001L, 100.0, Some(50.0), force = true)
-      ._1 == "BENCH_LOCAL_noisy.json")
-    assert(Bench.ledgerFor("1", 1500L, 100.0, Some(50.0), force = true)
-      ._1 == "BENCH_LOCAL_sf1.json")
-  }
-
-  test("a faster run always replaces the pin (a stale ledger cannot " +
-    "survive a code change that speeds the suite)") {
-    assert(Bench.ledgerFor("0.1", 1500L, 40.0, Some(52.79), force = false)
-      ._1 == "BENCH_LOCAL.json")
+    // expected routing, so no stderr note
+    assert(Bench.ledgerFor("0.001", distributed = false, Nil) ==
+      ("BENCH_LOCAL_sf0.001.json", None))
+    assert(Bench.ledgerFor("1", distributed = false, Nil) ==
+      ("BENCH_LOCAL_sf1.json", None))
+    // sf0.1 is no exception: one overwrite-latest file per scale
+    assert(Bench.ledgerFor("0.1", distributed = false, Nil) ==
+      ("BENCH_LOCAL_sf0.1.json", None))
+    // a distributed master writes the cluster file of its scale
+    assert(Bench.ledgerFor("0.1", distributed = true, Nil) ==
+      ("BENCH_CLUSTER_sf0.1.json", None))
+    assert(Bench.ledgerFor("1", distributed = true, Nil) ==
+      ("BENCH_CLUSTER_sf1.json", None))
   }
 
   test("needsExtraRepeat: a >ratio spike earns extras; quiet bands, " +
@@ -94,99 +52,6 @@ class BenchLedgerSpec extends AnyFunSuite {
     assert(Bench.needsExtraRepeat(Seq(0.0, 0.2), 3.0))
   }
 
-  test("parsePinnedTotal anchors to the metric field: field reordering " +
-    "or a stray earlier value cannot silently feed the clobber guard") {
-    // the real ledger shape: total first
-    assert(Bench.parsePinnedTotal(
-      """{"metric":"total","value":51.8,"unit":"sec"}""").contains(51.8))
-    // a stray value BEFORE the anchored pair must not win
-    assert(Bench.parsePinnedTotal(
-      """{"queries":{"q1":0.1},"metric":"total","value":42.5}""")
-      .contains(42.5))
-    // drifted format (no anchored pair) -> None, never a wrong number
-    assert(Bench.parsePinnedTotal(
-      """{"value":9.9,"metric":"total"}""").isEmpty)
-    assert(Bench.parsePinnedTotal("not json at all").isEmpty)
-    assert(Bench.parsePinnedTotal("").isEmpty)
-  }
-
-  test("calibration labels diverts, never blocks improvements: a faster " +
-    "total pins regardless of probes; a worse total's note names the " +
-    "measured phase or escalates when probes are in band") {
-    // a FASTER total under out-of-band probes is the most conservative
-    // pin possible — it must pin (the r11 measured case: 50.8 s beat a
-    // 52.3-era pin but a min-anchored 713 ms band diverted it)
-    assert(Bench.ledgerFor("0.1", 1500L, 48.0, Some(52.0), force = false,
-      calibMs = Some(1151L), pinnedCalibMs = Some(1000L))
-      ._1 == "BENCH_LOCAL.json")
-    // a WORSE total with an out-of-band probe: slow phase, measured
-    val (file, note) = Bench.ledgerFor("0.1", 1500L, 55.0, Some(52.0),
-      force = false, calibMs = Some(1151L), pinnedCalibMs = Some(1000L))
-    assert(file == "BENCH_LOCAL_noisy.json")
-    assert(note.exists(n => n.contains("[cpu]") &&
-      n.contains("slow host phase, measured directly")))
-    // a WORSE total with BOTH probes in band: the phase excuse is
-    // measured away — the note escalates to likely-real-regression
-    val (f3, n3) = Bench.ledgerFor("0.1", 1500L, 55.0, Some(52.0),
-      force = false, calibMs = Some(1000L), pinnedCalibMs = Some(1000L),
-      calibMemMs = Some(1400L), pinnedCalibMemMs = Some(1400L))
-    assert(f3 == "BENCH_LOCAL_noisy.json")
-    assert(n3.exists(_.contains("REAL regression")))
-    // exactly at tolerance is still in band (strictly-greater trips) —
-    // both dimensions compared, so still the full escalation
-    assert(Bench.ledgerFor("0.1", 1500L, 55.0, Some(52.0), force = false,
-      calibMs = Some(1150L), pinnedCalibMs = Some(1000L),
-      calibMemMs = Some(1400L), pinnedCalibMemMs = Some(1400L))
-      ._2.exists(_.contains("REAL regression")))
-    // ADVICE r11: ONE comparable in-band dimension (legacy pin without
-    // calib_mem_ms) must NOT claim "measured away" — the memory
-    // dimension (the one the r11 forensics showed actually moves) is
-    // unmeasured; the note names the compared dimension and hedges
-    val (f1d, n1d) = Bench.ledgerFor("0.1", 1500L, 55.0, Some(52.0),
-      force = false, calibMs = Some(1000L), pinnedCalibMs = Some(1000L))
-    assert(f1d == "BENCH_LOCAL_noisy.json")
-    assert(n1d.exists(n => n.contains("[cpu]") &&
-      n.contains("unmeasured") && !n.contains("measured away")))
-    // second dimension (r11 forensics): an out-of-band MEMORY probe
-    // labels the slow phase even when the CPU probe is fine — the
-    // observed host state where shuffle-heavy queries inflate 1.3-1.8x
-    // while the pure-CPU fold stays flat
-    val (f2, n2) = Bench.ledgerFor("0.1", 1500L, 55.0, Some(52.0),
-      force = false, calibMs = Some(1000L), pinnedCalibMs = Some(1000L),
-      calibMemMs = Some(2000L), pinnedCalibMemMs = Some(1500L))
-    assert(f2 == "BENCH_LOCAL_noisy.json")
-    assert(n2.exists(_.contains("[mem]")))
-    // legacy pin without calibration fields → worse total still diverts
-    // (with the regression-leaning note, since nothing measured a phase)
-    assert(Bench.ledgerFor("0.1", 1500L, 55.0, Some(52.0), force = false,
-      calibMs = Some(9999L), pinnedCalibMs = None)
-      ._1 == "BENCH_LOCAL_noisy.json")
-    // force pins over everything except the sf and spread gates
-    assert(Bench.ledgerFor("0.1", 1500L, 55.0, Some(52.0), force = true,
-      calibMs = Some(9999L), pinnedCalibMs = Some(1000L))
-      ._1 == "BENCH_LOCAL.json")
-    assert(Bench.ledgerFor("1", 1500L, 48.0, Some(52.0), force = false,
-      calibMs = Some(1000L), pinnedCalibMs = Some(1000L))
-      ._1 == "BENCH_LOCAL_sf1.json")
-  }
-
-  test("parsePinnedCalib returns the WORSE probe time of the pinned " +
-    "run (its quiet-state upper bound — a min anchor on a straddling " +
-    "pin made the band unreachable); legacy lines parse to None") {
-    assert(Bench.parsePinnedCalib(
-      """{"metric":"total","value":52.3,"calib_ms":[980,1065]}""")
-      .contains(1065L))
-    assert(Bench.parsePinnedCalib(
-      """{"calib_ms":[1065,980],"metric":"total"}""").contains(1065L))
-    assert(Bench.parsePinnedCalib(
-      """{"metric":"total","value":52.3}""").isEmpty)
-    assert(Bench.parsePinnedCalib("").isEmpty)
-    // the memory dimension parses by field name and never cross-reads
-    val two = """{"calib_ms":[980,1065],"calib_mem_ms":[1450,1390]}"""
-    assert(Bench.parsePinnedCalib(two, "calib_mem_ms").contains(1450L))
-    assert(Bench.parsePinnedCalib(two).contains(1065L))
-  }
-
   test("encodeCompact emits millisecond key:value pairs and degrades to " +
     "coarser units only when the budget demands it") {
     val r = Map("q01_scan_project" -> 0.1234, "q191_auc_roc" -> 2.6049,
@@ -207,20 +72,5 @@ class BenchLedgerSpec extends AnyFunSuite {
     // squeezed budget degrades: centisec, then decisec
     assert(Bench.encodeCompact(big, budget = s2.length - 1)._1 == "centisec")
     assert(Bench.encodeCompact(big, budget = 10)._1 == "decisec")
-  }
-
-  test("slowDivertCount counts only diverts against the SAME pin: a " +
-    "re-pin resets the escalation naturally") {
-    val line = """{"metric":"total","value":60.1,"unit":"sec",""" +
-      """"slow_diverts":2,"slow_diverts_vs":52.28}"""
-    // same pin -> the recorded count carries forward
-    assert(Bench.slowDivertCount(line, 52.28) == 2)
-    // a different pin (deliberate re-pin happened) -> reset to 0
-    assert(Bench.slowDivertCount(line, 51.9) == 0)
-    // no counter recorded yet (first divert, or legacy noisy file) -> 0
-    assert(Bench.slowDivertCount(
-      """{"metric":"total","value":60.1,"unit":"sec"}""", 52.28) == 0)
-    assert(Bench.slowDivertCount("", 52.28) == 0)
-    assert(Bench.slowDivertCount("not json", 52.28) == 0)
   }
 }

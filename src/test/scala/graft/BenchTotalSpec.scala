@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** A query whose runs all fail carries the -1.0 sentinel median. Summed
   * into the headline total it made a crash look like a speed-up; these
-  * pin that a failure is named, left out of the total, and never pins.
+  * pin that a failure is named, left out of the total, and written to
+  * its own ledger file.
   */
 class BenchTotalSpec extends AnyFunSuite {
 
@@ -18,19 +19,21 @@ class BenchTotalSpec extends AnyFunSuite {
     assert(Bench.totalOf(Map.empty) == (0.0, Nil))
   }
 
-  test("ledgerFor never pins a run with failures, even a faster or " +
-    "forced one") {
-    val (file, note) = Bench.ledgerFor("0.1", 100L, 30.0, Some(50.0),
-      force = true, failed = Seq("q202_kcore_peel"))
+  test("ledgerFor routes a run with failures to the invalid file, local " +
+    "or cluster") {
+    val (file, note) = Bench.ledgerFor("0.1", distributed = false,
+      Seq("q202_kcore_peel"))
     assert(file == "BENCH_LOCAL_invalid.json")
     assert(note.exists(n =>
       n.startsWith("INVALID") && n.contains("q202_kcore_peel")))
-    // failures are checked before the scale routing
-    assert(Bench.ledgerFor("1", 100L, 30.0, None, force = false,
-      failed = Seq("q01_a"))._1 == "BENCH_LOCAL_invalid.json")
-    // no failures: the existing routing is untouched
-    assert(Bench.ledgerFor("0.1", 100L, 30.0, Some(50.0), force = false) ==
-      ("BENCH_LOCAL.json", None))
+    // failures are checked before the scale and master routing
+    assert(Bench.ledgerFor("1", distributed = false, Seq("q01_a"))._1 ==
+      "BENCH_LOCAL_invalid.json")
+    assert(Bench.ledgerFor("0.1", distributed = true, Seq("q01_a"))._1 ==
+      "BENCH_LOCAL_invalid.json")
+    // no failures: the scale routing is untouched
+    assert(Bench.ledgerFor("0.1", distributed = false, Nil) ==
+      ("BENCH_LOCAL_sf0.1.json", None))
   }
 
   test("the compact stdout line still carries a failed query as -1000 ms") {

@@ -16,8 +16,7 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(!GraftSession.isLocalMaster("spark://host:7077"))
     assert(!GraftSession.isLocalMaster("yarn"))
     // unknown/malformed masters classify as non-local: they route to the
-    // overwrite-latest cluster ledger, where a misclassification cannot
-    // damage the guarded local pin
+    // cluster ledger, never into the local one
     assert(!GraftSession.isLocalMaster("localhost"))
   }
 

@@ -83,6 +83,21 @@ class ScaleEscalationSpec extends SparkSpec {
     assert(eI.getMessage.contains(Escalation.FuzzyBlockWidthKey))
   }
 
+  test("bcastIfSmall hints a broadcast up to exactly 1,000,000 rows; " +
+    "one more row or an unknown count (-1) plans no hint") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    val df = spark.range(3).toDF("id")
+    def hinted(rows: Long): Boolean =
+      Escalation.bcastIfSmall(df, rows).queryExecution.analyzed match {
+        case h: ResolvedHint => h.hints.strategy.contains(BROADCAST)
+        case _ => false
+      }
+    assert(hinted(0L))
+    assert(hinted(1000000L))
+    assert(!hinted(1000001L))
+    assert(!hinted(-1L))
+  }
+
   test("q139: a finer geo grid emits EXACTLY the default grid's rows " +
     "(the sf1 density knob is output-invariant)") {
     val dflt = ScalarQueries.q139_geo_cell_join(spark, fixtureDir)

@@ -6,8 +6,13 @@ item 3). Decodes every bench artifact format this repo has produced:
     line whose "queries" is (a) an ms/centisec/decisec STRING
     ("01:123,92:5049", unit in "queries_unit"; r11+), or (b) a legacy
     JSON object in decisec ints / 1-2-decimal seconds;
-  - repo ledger BENCH_LOCAL*.json: one full-precision line,
-    "queries" = {full_query_name: seconds}.
+  - repo ledger BENCH_LOCAL*.json / BENCH_CLUSTER*.json: one
+    full-precision line, "queries" = {full_query_name: seconds}.
+
+Each side's core count is "cpus" in the ledger line, or at the top level
+of a BENCH_rNN.json envelope. Timings taken at different core counts are
+different populations: the comparison warns when they differ, and notes a
+side that does not record its count.
 
 Usage: python3 tools/bench_compare.py <old.json> <new.json> [minDeltaMs]
 Prints totals, calibration, and per-query deltas over minDeltaMs
@@ -17,7 +22,7 @@ import json, re, sys
 
 
 def load_seconds(path):
-    """-> (total_sec, calib_ms_or_None, {short_key: seconds})"""
+    """-> (total_sec, calib_ms_or_None, cpus_or_None, {short_key: seconds})"""
     raw = json.load(open(path))
     d = raw.get("parsed", raw)
     if not isinstance(d, dict) or "queries" not in d:
@@ -36,12 +41,21 @@ def load_seconds(path):
             # full ledger keys are q92_text_tfidf; compact keys are "92"
             m = re.match(r"q?(\d+)", k)
             out[m.group(1).lstrip("0") or "0"] = float(v) / div
-    return float(d.get("value", sum(out.values()))), d.get("calib_ms"), out
+    cpus = d.get("cpus", raw.get("cpus"))
+    return (float(d.get("value", sum(out.values()))), d.get("calib_ms"),
+            cpus, out)
 
 
 def main(old_path, new_path, min_delta_ms=100):
-    to, co, qo = load_seconds(old_path)
-    tn, cn, qn = load_seconds(new_path)
+    to, co, po, qo = load_seconds(old_path)
+    tn, cn, pn, qn = load_seconds(new_path)
+    print(f"cpus: {po} -> {pn}")
+    if po is None or pn is None:
+        print("note: a side records no core count (cpus: None); check it "
+              "before reading the deltas as a regression signal")
+    elif po != pn:
+        print(f"WARNING: different core counts ({po} vs {pn}): the "
+              "timings are not comparable as a regression signal")
     print(f"total: {to:.2f} s -> {tn:.2f} s ({(tn - to) / to:+.1%} vs old)"
           if to else f"total: {tn:.2f} s")
     if co or cn:

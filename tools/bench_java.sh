@@ -9,7 +9,7 @@
 #   session profile every main shares (SPARK_GRAFT_CPUS, _MASTER, _JARS,
 #   _EXEC_MEM, _TEXTCACHE_DIR, _CHECKPOINT_DIR) is read by
 #   graft.GraftSession.harness; graft.Bench also reads SPARK_GRAFT_SF_DIR,
-#   _CALIB, _CALIB_ONLY, _BENCH_REPEATS and _BENCH_FORCE.
+#   _CALIB and _BENCH_REPEATS.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 MAIN="${1:-graft.Bench}"

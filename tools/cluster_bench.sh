@@ -6,11 +6,11 @@
 # executor-fetched app jar. Eleven rounds of perf numbers were local[32]
 # (in-process exchange, zero serialization); this measures what that mode
 # structurally cannot: a plan that leans on in-process shuffle cheapness
-# shows up here as a per-query outlier vs the local pin
-# (tools/bench_compare.py BENCH_LOCAL.json BENCH_CLUSTER_sf0.1.json).
+# shows up here as a per-query outlier vs a local run
+# (tools/bench_compare.py BENCH_LOCAL_sf0.1.json BENCH_CLUSTER_sf0.1.json).
 #
-# The run routes its ledger line to BENCH_CLUSTER_sf<sf>.json (Bench.main
-# masterEnv branch) — it can never touch the local[32] pin.
+# The run writes its ledger line to BENCH_CLUSTER_sf<sf>.json
+# (Bench.ledgerFor under a non-local master), never to a local ledger.
 #
 # Usage: tools/cluster_bench.sh [sfDir]
 # Prereq: sbt -batch compile.
