@@ -8,15 +8,15 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 60-bit SimHash (Charikar, STOC 2002) of a text column over
-  * md5-derived token hashes, in one codegen'd pass — and, unlike the
-  * xxhash64-based [[graft.functions.SimHash]], exactly replayable in any
-  * engine with md5: token hash = the first 15 hex chars of `md5(token)`
+  * md5-derived token hashes, in one codegen'd pass — the fingerprint of
+  * the [[graft.functions.SimHash]] near-dup tier, exactly replayable in
+  * any engine with md5: token hash = the first 15 hex chars of `md5(token)`
   * read as a 60-bit integer, fingerprint bit b = majority vote
   * `2·|{tokens with bit b set}| ≥ |tokens|` over the DISTINCT tokens
   * (ties round up, pinned on both sides). The q96 DuckDB oracle rebuilds
   * the identical fingerprints from md5 hex in SQL.
   *
-  * Why an expression (SURVEY §7.3 tier): the Column formulation is 60
+  * Why an expression (SURVEY §7.3 tier): a Column formulation is 60
   * interpreted `aggregate` folds per row; this is one pass per row with a
   * thread-cached MessageDigest, inside WholeStageCodegen via a static
   * call. Tokens are deduplicated by their 60-bit hash — identical to

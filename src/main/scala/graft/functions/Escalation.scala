@@ -100,13 +100,16 @@ object Escalation {
     }.getOrElse(default)
 
   def confInt(spark: SparkSession, key: String, default: Int): Int =
-    spark.conf.getOption(key).map { v =>
-      try v.trim.toInt
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"spark conf $key must be an integer, got '$v'")
-      }
-    }.getOrElse(default)
+    spark.conf.getOption(key).map(parseConfInt(key, _)).getOrElse(default)
+
+  /** [[confInt]]'s parse of one value of `key`, for readers that hold a
+    * SQLConf rather than a session (physical operators). */
+  private[graft] def parseConfInt(key: String, v: String): Int =
+    try v.trim.toInt
+    catch { case _: NumberFormatException =>
+      throw new IllegalArgumentException(
+        s"spark conf $key must be an integer, got '$v'")
+    }
 
   /** Compute-dense-stage guard (round 10, BASELINE §4.0c): a projection
     * or broadcast-join probe that costs ≫ its scan executes in the

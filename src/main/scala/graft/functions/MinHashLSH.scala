@@ -51,49 +51,36 @@ object MinHashLSH {
     }
   }
 
-  /** Candidate near-duplicate pairs (id_a < id_b): docs sharing any band.
+  /** Candidate near-duplicate pairs (id_a < id_b): docs sharing any band,
+    * plus a release handle for the internal banded-signature cache.
     *
-    * Band keys are xxhash64-compressed (see [[candidatePairsRaw]]), so the
-    * result may contain RARE phantom pairs from a 64-bit band-key collision
-    * (odds ~n²/2⁶⁵ across n·bands keys). Callers that cannot tolerate a
-    * false candidate must run an exact-verify step (the normal LSH pipeline
-    * shape — e.g. the Jaccard filter in q85 / CurationPipeline.nearDedup);
-    * the dedup here removes cross-band duplicates, not phantom collisions.
+    * The pairs are RAW: a pair agreeing on m bands appears m times. A
+    * downstream exact-verify filter runs anyway (the normal LSH pipeline
+    * shape — the Jaccard filter in q85 / q94 /
+    * [[graft.operators.CurationPipeline.nearDedup]]), and deduping AFTER it
+    * is much cheaper: the filtered set is small, while deduping here would
+    * shuffle the full candidate multiset. Callers that want each pair once
+    * call `.distinct()` themselves.
+    *
+    * Band keys are xxhash64-compressed, so the result may contain RARE
+    * phantom pairs from a 64-bit band-key collision (odds ~n²/2⁶⁵ across
+    * n·bands keys); the exact-verify step removes them.
+    *
+    * The release handle unpersists the banded cache (see the persist note
+    * inside). Callers that drop it leave the cache to the session-level
+    * sweep the bench/verify harnesses run between queries; long-lived
+    * callers that materialize the pair stream (e.g.
+    * [[graft.operators.CurationPipeline]]) call it once their downstream
+    * frame is materialized, so repeated invocations don't accumulate
+    * banded caches.
     *
     * @param maxBucket drop buckets larger than this before pairing (skew
     *                  guard; a bucket of size m yields m^2/2 pairs).
     */
   def candidatePairs(docs: DataFrame, idCol: String, textCol: String,
                      k: Int = 8, bands: Int = 4,
-                     maxBucket: Int = 1000): DataFrame =
-    candidatePairsRaw(docs, idCol, textCol, k, bands, maxBucket).distinct()
-
-  /** Candidate pairs WITHOUT the cross-band dedup — a pair agreeing on m
-    * bands appears m times. When a downstream exact-verify filter runs
-    * anyway (the normal LSH pipeline), deduping AFTER that filter is much
-    * cheaper: the filter output is small, while deduping here shuffles the
-    * full candidate multiset.
-    */
-  def candidatePairsRaw(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int = 8, bands: Int = 4,
-                        maxBucket: Int = 1000,
-                        blockCols: Seq[String] = Nil): DataFrame =
-    candidatePairsRawReleasable(
-      docs, idCol, textCol, k, bands, maxBucket, blockCols)._1
-
-  /** [[candidatePairsRaw]] plus a release handle that unpersists the
-    * internal banded-signature cache (see the persist note inside). The
-    * plain overload leaves the cache to the session-level sweep the
-    * bench/verify harnesses run between queries; long-lived callers that
-    * materialize the pair stream (e.g. [[graft.operators.CurationPipeline]])
-    * call the handle once their downstream frame is materialized, so
-    * repeated pipeline invocations don't accumulate banded caches.
-    */
-  def candidatePairsRawReleasable(
-      docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, bands: Int = 4,
-      maxBucket: Int = 1000,
-      blockCols: Seq[String] = Nil): (DataFrame, () => Unit) = {
+                     maxBucket: Int = 1000,
+                     blockCols: Seq[String] = Nil): (DataFrame, () => Unit) = {
     // All k minhashes + band strings in ONE codegen'd pass per row
     // (graft.expressions.MinHashBands — replaces k interpreted
     // transform/array_min folds; band strings byte-identical to
@@ -140,31 +127,37 @@ object MinHashLSH {
       // ~0.1 s more than checkpoint blocks at sf0.1 (measured), the
       // price of the laziness contract.
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Skew guard as a two-phase count + ANTI join against the overflow
-    // bands, NOT a Window over band. The window funneled the
-    // pathological hot bucket — the exact case the guard exists for —
-    // into ONE task's sort buffer before any row was filtered: a
-    // spill-backed straggler that dominates wall-clock at scale. The
-    // count's partial aggregation collapses the hot key map-side (one
-    // row per partition reaches the shuffle) and the anti join's build
-    // side holds only bands ABOVE the cap — near-empty on a healthy
-    // corpus, so it broadcasts. The count phase reads the persisted
-    // banded rows (round 13) — the old "signature computed twice" trade
-    // is gone; what the extra phase costs now is one scan of the narrow
-    // cache. Kept set is identical to the oracle's QUALIFY semantics
-    // (band ∉ overflow ⇔ bucket_n ≤ cap; band keys are never null).
-    val pruned = if (maxBucket == Int.MaxValue) banded else {
-      val bigBuckets = banded.groupBy(col("band"))
-        .agg(count(lit(1)).as("bucket_n"))
-        .filter(col("bucket_n") > maxBucket)
-        .select(col("band"))
-      banded.join(bigBuckets, Seq("band"), "left_anti")
-    }
-    val pairs = pruned.as("a")
-      .join(pruned.as("b"),
-        col("a.band") === col("b.band") && col("a.id") < col("b.id"))
+    val pairs = bandPairs(banded, maxBucket)
       .select(col("a.id").as("id_a") +: col("b.id").as("id_b")
         +: blockCols.map(c => col(s"a.$c")): _*)
     (pairs, () => { banded.unpersist(blocking = false); () })
+  }
+
+  /** The capped band-bucket pair join every batch near-dup tier shares
+    * (this MinHash tier, [[SimHash.nearDupPairs]]): `banded` holds one row
+    * per (doc, band) with columns `id` and `band`; buckets of more than
+    * `maxBucket` rows are dropped, and the rest self-join on `band` with
+    * `a.id < b.id`. Callers select their output from `a.*` and `b.*`.
+    *
+    * The cap is a two-phase count + ANTI join against the overflow bands,
+    * NOT a Window over band. A window funnels the pathological hot bucket
+    * — the exact case the guard exists for — into ONE task's sort buffer
+    * before any row is filtered: a spill-backed straggler that dominates
+    * wall-clock at scale. The count's partial aggregation collapses the hot
+    * key map-side (one row per partition reaches the shuffle) and the anti
+    * join's build side holds only bands ABOVE the cap — near-empty on a
+    * healthy corpus, so it broadcasts. The kept set is the oracle's
+    * QUALIFY `count ≤ cap` (band ∉ overflow ⇔ bucket_n ≤ cap; band keys
+    * are never null). `banded` is read three times; persisting it is the
+    * caller's choice.
+    */
+  private[graft] def bandPairs(banded: DataFrame, maxBucket: Int): DataFrame = {
+    val bigBuckets = banded.groupBy(col("band"))
+      .agg(count(lit(1)).as("bucket_n"))
+      .filter(col("bucket_n") > maxBucket)
+      .select(col("band"))
+    val pruned = banded.join(bigBuckets, Seq("band"), "left_anti")
+    pruned.as("a").join(pruned.as("b"),
+      col("a.band") === col("b.band") && col("a.id") < col("b.id"))
   }
 }

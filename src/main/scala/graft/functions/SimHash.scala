@@ -1,82 +1,50 @@
 package graft.functions
 
+import graft.expressions.SimHash60
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** SimHash near-duplicate fingerprinting (Charikar, "Similarity
-  * estimation techniques from rounding algorithms", STOC 2002; applied to
-  * web-scale dedup in Manku/Jain/Sarma, WWW 2007 — public literature).
+/** SimHash near-duplicate tier (Charikar, "Similarity estimation
+  * techniques from rounding algorithms", STOC 2002; applied to web-scale
+  * dedup in Manku/Jain/Sarma, WWW 2007 — public literature).
   *
-  * A document's 64-bit simhash: for each bit position b, sum +1/-1 over its
-  * tokens according to bit b of `xxhash64(token)`; bit b of the fingerprint
-  * is 1 iff the sum is positive. Near-duplicates have small Hamming
-  * distance between fingerprints.
-  *
-  * Everything is columnar expressions — the fingerprint is computed in one
-  * narrow pass (no explode, no shuffle): 64 `aggregate(...)` folds over the
-  * token array, OR-ed into one long. For candidate generation at scale the
-  * fingerprint is split into 4 16-bit bands (docs within Hamming distance 3
-  * must agree on ≥1 band — pigeonhole), so the join is a bucket join on a
-  * band key, never all-pairs.
+  * The fingerprint is [[graft.expressions.SimHash60]]: a 60-bit md5-based
+  * simhash of the distinct whitespace tokens, computed in one codegen'd
+  * pass per row. Near-duplicates have small Hamming distance between
+  * fingerprints. For candidate generation the fingerprint is split into
+  * 4 bands of 15 bits (docs within Hamming distance 3 must agree on ≥1
+  * band — pigeonhole), so the join is a bucket join on a band key, never
+  * all-pairs.
   */
 object SimHash {
 
-  /** 64-bit simhash of a (distinct-)token array column. */
-  def simhash(tok: Column): Column = {
-    val hashed = transform(tok, t => xxhash64(t))
-    val bits = (0 until 64).map { b =>
-      // sum of (+1 | -1) for bit b over tokens, as a long
-      val vote = aggregate(hashed, lit(0L),
-        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-      when(vote > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
-  /** Hamming distance between two 64-bit fingerprints. */
+  /** Hamming distance between two fingerprints. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** The 16-bit band `i` (0..3) of a fingerprint, for LSH-style bucketing. */
-  def band16(fp: Column, i: Int): Column =
-    shiftright(fp, i * 16).bitwiseAND(0xFFFFL)
-
-  /** Append a `simhash` column derived from whitespace tokens of textCol. */
-  def withSimhash(docs: DataFrame, textCol: String): DataFrame =
-    docs.withColumn("simhash",
-      simhash(array_distinct(split(col(textCol), " "))))
-
-  /** Candidate pairs with Hamming distance ≤ maxDist, generated by banding
-    * (4×16-bit bands) then exact Hamming check — never an all-pairs join.
-    * Sound for maxDist ≤ 3 (pigeonhole over 4 bands).
+  /** Candidate pairs (id_a < id_b, `dist` bigint) with Hamming distance
+    * ≤ maxDist, generated by banding (4×15-bit bands; band i's key is
+    * `i·32768 + slice`) then an exact Hamming check — never an all-pairs
+    * join. Sound for maxDist ≤ 3 (pigeonhole over 4 bands). The q96
+    * oracle rebuilds the identical fingerprints and bands in SQL.
     *
-    * `maxBucket` caps each band bucket (same guard as
-    * [[MinHashLSH.candidatePairsRaw]]): a band shared by m docs emits
-    * m²/2 pairs, and exact-dup-heavy corpora — the norm at 100 TB — put a
-    * large fraction of the corpus on ONE fingerprint. Buckets above the cap
-    * are dropped before pairing; run exact dedup first so identical docs
-    * never reach this tier.
+    * `maxBucket` caps each band bucket through the shared
+    * [[MinHashLSH.bandPairs]]: a band shared by m docs emits m²/2 pairs,
+    * and exact-dup-heavy corpora — the norm at 100 TB — put a large
+    * fraction of the corpus on ONE fingerprint. Buckets above the cap are
+    * dropped before pairing; run exact dedup first so identical docs never
+    * reach this tier.
     */
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                    maxDist: Int = 3, maxBucket: Int = 200): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val fp = withSimhash(docs.select(col(idCol), col(textCol)), textCol)
-      .select(col(idCol).as("id"), col("simhash"))
-    val all = fp.select(col("id"), col("simhash"),
-        explode(array((0 until 4).map(i =>
-          concat_ws(":", lit(i.toString), band16(col("simhash"), i))): _*)).as("band"))
-    // two-phase count + anti join against the overflow bands, not a
-    // Window over band: the hot bucket this guard defends against must
-    // not be buffered whole in one window task, and the overflow side is
-    // near-empty so AQE broadcasts it (see MinHashLSH.candidatePairsRaw)
-    val bigBuckets = all.groupBy(col("band"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
-      .select(col("band"))
-    val banded = all.join(bigBuckets, Seq("band"), "left_anti")
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.id") < col("b.id"))
+    val fp = docs.select(col(idCol).as("id"),
+      SimHash60.simhash60(col(textCol)).as("fp"))
+    val bandCols = (0 until 4).map(i =>
+      lit(i.toLong * 32768L) + shiftright(col("fp"), i * 15).bitwiseAND(32767L))
+    val banded = fp.select(col("id"), col("fp"),
+      explode(array(bandCols: _*)).as("band"))
+    MinHashLSH.bandPairs(banded, maxBucket)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        hamming(col("a.simhash"), col("b.simhash")).as("dist"))
+        hamming(col("a.fp"), col("b.fp")).cast("long").as("dist"))
       .filter(col("dist") <= maxDist)
       .distinct()
   }

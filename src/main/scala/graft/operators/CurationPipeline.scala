@@ -93,16 +93,13 @@ object CurationPipeline {
   /** Drop near-duplicates: LSH candidates verified by exact Jaccard; for
     * every verified pair the larger id loses (deterministic survivor rule,
     * transitively keeps at least one doc per duplicate cluster).
+    *
+    * Returns the survivors plus the release handle for the LSH stage's
+    * internal banded-signature cache (freed by `run`'s Result.release /
+    * stats path once the survivors are materialized; a caller that drops
+    * the handle is covered by the harnesses' between-queries cache sweep).
     */
-  def nearDedup(docs: DataFrame, cfg: Config): DataFrame =
-    nearDedupReleasable(docs, cfg)._1
-
-  /** [[nearDedup]] plus the release handle for the LSH stage's internal
-    * banded-signature cache (freed by `run`'s Result.release / stats path
-    * once the survivors are materialized; a standalone `nearDedup` caller
-    * is covered by the harnesses' between-queries cache sweep). */
-  private def nearDedupReleasable(docs: DataFrame,
-                                  cfg: Config): (DataFrame, () => Unit) = {
+  def nearDedup(docs: DataFrame, cfg: Config): (DataFrame, () => Unit) = {
     // per-side RENAMED tok copies here, unlike q85/q94's alias form
     // (round 13, measured): the pipeline's tok reads the cached
     // exact-dedup prefix, so each broadcast build pays a cache decode —
@@ -113,7 +110,7 @@ object CurationPipeline {
     // scan instead, where computing the build once wins.
     val tok = docs.select(col(cfg.idCol).as("__id"),
       Dedup.tokenIds(col(cfg.textCol)).as("__tok"))
-    val (cand, candRelease) = MinHashLSH.candidatePairsRawReleasable(
+    val (cand, candRelease) = MinHashLSH.candidatePairs(
       docs, cfg.idCol, cfg.textCol,
       cfg.minhashK, cfg.minhashBands, cfg.maxBucket)
     val losers = cand
@@ -152,7 +149,7 @@ object CurationPipeline {
       // catches callers that never do).
       val exact = exactDedup(
         repetitionGate(qualityGate(scrub(docs, cfg), cfg), cfg), cfg).cache()
-      val (near, candRelease) = nearDedupReleasable(exact, cfg)
+      val (near, candRelease) = nearDedup(exact, cfg)
       val out = annotate(near, cfg)
       return Result(out, Map.empty,
         release = () => { exact.unpersist(false); candRelease() })
@@ -168,7 +165,7 @@ object CurationPipeline {
       .observe(obsGated, count(lit(1)).as("n"))
     val exact = exactDedup(gated, cfg).cache()
     val nExact = exact.count()                 // action #1: fills the cache
-    val (near0, candRelease) = nearDedupReleasable(exact, cfg)
+    val (near0, candRelease) = nearDedup(exact, cfg)
     val near = near0.cache()
     val nNear = near.count()                   // action #2: LSH runs once
     candRelease()  // near is materialized; the banded cache is done

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Det, Tables}
-import graft.functions.{Dedup, MinHashLSH, Sampling, TextFunctions}
+import graft.functions.{Dedup, MinHashLSH, Sampling, SimHash, TextFunctions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,10 +35,22 @@ object PipelineQueries {
     */
   def q85_dedup_minhash_lsh(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    // raw (multi-band) candidates: dedup AFTER the jaccard filter — the
-    // filtered set is tiny, the unfiltered candidate multiset is not
-    val cand = MinHashLSH.candidatePairsRaw(docs, "doc_id", "text",
-      k = 8, bands = 4, maxBucket = LshMaxBucket)
+    val cand = MinHashLSH.candidatePairs(docs, "doc_id", "text",
+      k = 8, bands = 4, maxBucket = LshMaxBucket)._1
+    verifiedPairs(docs, cand, num = 9, den = 10, blockCols = Nil)
+      .select(col("id_a"), col("id_b"), Det.r4(col("jaccard_raw")).as("jaccard"))
+      .distinct()
+      .orderBy(col("id_a"), col("id_b"))
+  }
+
+  /** The exact-verify step of the declared LSH queries (q85, q94): keeps
+    * the raw (multi-band) candidate pairs whose token-id Jaccard is at
+    * least `num/den`, as `blockCols`, id_a, id_b, jaccard_raw. Dedup runs
+    * AFTER this filter in the callers — the filtered set is tiny, the
+    * unfiltered candidate multiset is not.
+    */
+  private def verifiedPairs(docs: DataFrame, cand: DataFrame, num: Int,
+                            den: Int, blockCols: Seq[String]): DataFrame = {
     // verification intersect runs on interned (xxhash64) token ids — same
     // set sizes w.h.p., far cheaper per candidate pair
     // join on doc_id through ALIASES, not per-side renamed copies
@@ -49,20 +61,31 @@ object PipelineQueries {
     cand
       .join(tok.as("ta"), col("id_a") === col("ta.doc_id"))
       .join(tok.as("tb"), col("id_b") === col("tb.doc_id"))
-      .select(col("id_a"), col("id_b"), col("ta.tok").as("tok_a"),
-        col("tb.tok").as("tok_b"))
+      .select(blockCols.map(col) ++ Seq(col("id_a"), col("id_b"),
+        col("ta.tok").as("tok_a"), col("tb.tok").as("tok_b")): _*)
       // exact length prefilter ahead of the O(|tok|) verify merge
-      // (round 12, guide §1.2): J ≥ 0.9 ⟹ min/max ≥ 0.9 ⟹
-      // 10·min ≥ 9·max — integer compare, drops no qualifying pair;
+      // (round 12, guide §1.2): J ≥ num/den ⟹ min/max ≥ num/den ⟹
+      // den·min ≥ num·max — integer compare, drops no qualifying pair;
       // the two filters combine into the verify join's condition with
       // the cheap conjunct first (CombineFilters keeps source order)
-      .filter(lit(10) * least(size(col("tok_a")), size(col("tok_b"))) >=
-        lit(9) * greatest(size(col("tok_a")), size(col("tok_b"))))
+      .filter(lit(den) * least(size(col("tok_a")), size(col("tok_b"))) >=
+        lit(num) * greatest(size(col("tok_a")), size(col("tok_b"))))
       .withColumn("jaccard_raw", Dedup.jaccardSortedIds(col("tok_a"), col("tok_b")))
-      .filter(col("jaccard_raw") >= 0.9)
-      .select(col("id_a"), col("id_b"), Det.r4(col("jaccard_raw")).as("jaccard"))
-      .distinct()
-      .orderBy(col("id_a"), col("id_b"))
+      .filter(col("jaccard_raw") >= num.toDouble / den)
+      .select(blockCols.map(col) ++ Seq(col("id_a"), col("id_b"),
+        col("jaccard_raw")): _*)
+  }
+
+  /** The q94 verified pair set WITHOUT the output rounding/sort — the
+    * form the cluster consumers (q100/q108/q109) feed to connected
+    * components, which re-shuffle immediately (a sort below their
+    * exchange would be wasted work). */
+  private[operators] def q94Pairs(spark: SparkSession,
+                                  sfDir: String): DataFrame = {
+    val docs = Tables.documents(spark, sfDir)
+    val cand = MinHashLSH.candidatePairs(docs, "doc_id", "text",
+      k = 8, bands = 4, maxBucket = LshMaxBucket, blockCols = Seq("lang"))._1
+    verifiedPairs(docs, cand, num = 4, den = 5, blockCols = Seq("lang"))
   }
 
   /** Lang-blocked MinHash-LSH near-dup — the scale-safe twin of the exact
@@ -72,33 +95,6 @@ object PipelineQueries {
     * exact pairs; unlike q81 its cost is bounded by bucket size, not by
     * block cardinality, so the SAME plan survives a 100× corpus (SCALE.md).
     */
-  /** The q94 verified pair set WITHOUT the output rounding/sort — the
-    * form the cluster consumers (q100/q108/q109) feed to connected
-    * components, which re-shuffle immediately (a sort below their
-    * exchange would be wasted work). */
-  private[operators] def q94Pairs(spark: SparkSession,
-                                  sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val cand = MinHashLSH.candidatePairsRaw(docs, "doc_id", "text",
-      k = 8, bands = 4, maxBucket = LshMaxBucket, blockCols = Seq("lang"))
-    // same alias-join shape as q85 (round 13): identical broadcast
-    // children ⇒ the tokenIds build is computed once and reused
-    val tok = docs.select(col("doc_id"), Dedup.tokenIds(col("text")).as("tok"))
-    cand
-      .join(tok.as("ta"), col("id_a") === col("ta.doc_id"))
-      .join(tok.as("tb"), col("id_b") === col("tb.doc_id"))
-      .select(col("lang"), col("id_a"), col("id_b"),
-        col("ta.tok").as("tok_a"), col("tb.tok").as("tok_b"))
-      // exact length prefilter ahead of the O(|tok|) verify merge
-      // (round 12): J ≥ 0.8 ⟹ min/max ≥ 0.8 ⟹ 5·min ≥ 4·max —
-      // integer compare, drops no qualifying pair (q81's bound)
-      .filter(lit(5) * least(size(col("tok_a")), size(col("tok_b"))) >=
-        lit(4) * greatest(size(col("tok_a")), size(col("tok_b"))))
-      .withColumn("jaccard_raw", Dedup.jaccardSortedIds(col("tok_a"), col("tok_b")))
-      .filter(col("jaccard_raw") >= 0.8)
-      .select(col("lang"), col("id_a"), col("id_b"), col("jaccard_raw"))
-  }
-
   def q94_dedup_lsh_lang(spark: SparkSession, sfDir: String): DataFrame =
     q94Pairs(spark, sfDir)
       .select(col("lang"), col("id_a"), col("id_b"),
@@ -126,12 +122,11 @@ object PipelineQueries {
       .withColumnRenamed("block", "label")
       .orderBy(col("label"), col("id_a"), col("id_b"))
 
-  /** SimHash near-dup tier, hash-checked (round 3 — promoted from the
-    * xxhash64 unit tier): 60-bit md5-based fingerprints
-    * ([[graft.expressions.SimHash60]]), 4 bands of 15 bits (sound for
-    * Hamming ≤ 3 by pigeonhole), exact Hamming verify. The oracle rebuilds
-    * the identical fingerprints from md5 hex in SQL — pure integer/bit
-    * arithmetic, no float anywhere.
+  /** SimHash near-dup tier, hash-checked ([[SimHash.nearDupPairs]]):
+    * 60-bit md5-based fingerprints ([[graft.expressions.SimHash60]]),
+    * 4 bands of 15 bits (sound for Hamming ≤ 3 by pigeonhole), exact
+    * Hamming verify. The oracle rebuilds the identical fingerprints from
+    * md5 hex in SQL — pure integer/bit arithmetic, no float anywhere.
     *
     * Band buckets are capped at [[LshMaxBucket]] exactly like q85/q94
     * (round 4): a popular fingerprint band — the norm in exact-dup-heavy
@@ -140,33 +135,10 @@ object PipelineQueries {
     * production plan. (At fixture scale the largest bucket is 136, so the
     * cap is semantically inert here — measured in DuckDB before pinning.)
     */
-  def q96_dedup_simhash(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val fp = Tables.documents(spark, sfDir)
-      .select(col("doc_id").as("id"),
-        graft.expressions.SimHash60.simhash60(col("text")).as("fp"))
-    val bandCols = (0 until 4).map(i =>
-      lit(i.toLong * 32768L) + shiftright(col("fp"), i * 15).bitwiseAND(32767L))
-    val all = fp.select(col("id"), col("fp"),
-        explode(array(bandCols: _*)).as("band"))
-    // two-phase count + anti join against overflow bands (the
-    // MinHashLSH/SimHash hot-bucket rule): the cap's kept set is
-    // identical to the oracle's QUALIFY, the hot bucket
-    // partial-aggregates map-side instead of being buffered whole in one
-    // window task, and the near-empty overflow side broadcasts
-    val bigBuckets = all.groupBy(col("band"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > LshMaxBucket)
-      .select(col("band"))
-    val banded = all.join(bigBuckets, Seq("band"), "left_anti")
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).cast("long").as("dist"))
-      .filter(col("dist") <= 3)
-      .distinct()
+  def q96_dedup_simhash(spark: SparkSession, sfDir: String): DataFrame =
+    SimHash.nearDupPairs(Tables.documents(spark, sfDir), "doc_id", "text",
+        maxBucket = LshMaxBucket)
       .orderBy(col("id_a"), col("id_b"))
-  }
 
   /** The WHOLE curation funnel as one hash-checked query (round 3): quality
     * gate ≥ 0.5 → exact dedup (min doc_id per distinct text) → capped-LSH

@@ -86,8 +86,11 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder],
     // the top-k analogue). The FINAL pass must hold each of its keys'
     // full heap to emit exactly k rows, so it never flushes — its
     // footprint is (keys / shuffle-width)×k, governed by the exchange.
-    val flushKeys = math.max(1,
-      conf.getConfString("graft.topk.partialFlushKeys", "131072").toInt)
+    val flushKeysKey = "graft.topk.partialFlushKeys"
+    val flushKeys = graft.functions.Escalation.parseConfInt(flushKeysKey,
+      conf.getConfString(flushKeysKey, "131072"))
+    require(flushKeys >= 1,
+      s"spark conf $flushKeysKey must be at least 1, got $flushKeys")
     val outRows = longMetric("numOutputRows")
     val flushes = longMetric("numFlushes")
     child.execute().mapPartitions { iter =>

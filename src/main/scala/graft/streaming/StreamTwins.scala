@@ -391,12 +391,12 @@ object StreamTwins {
     * — its id list is dropped and it emits nothing further (state stays
     * tiny under the hot-template skew that motivates the cap).
     *
-    * Semantics vs batch `MinHashLSH.candidatePairsRaw`: identical pair
+    * Semantics vs batch `MinHashLSH.candidatePairs`: identical pair
     * set when no bucket overflows (spec-pinned, batch-split-invariant);
     * on overflow the batch path drops the WHOLE bucket retroactively,
     * while a stream cannot retract — pairs emitted before the cap was
     * hit stand. Cross-band duplicate pairs are emitted like the batch
-    * Raw variant; callers dedupe in the verify join.
+    * path's raw pairs; callers dedupe in the verify join.
     */
   def lshCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
                         k: Int = 8, bands: Int = 4,

@@ -222,8 +222,8 @@ class PlanShapeSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     def verifyStage(docs: DataFrame): DataFrame = {
       // the exact q94 verify shape: candidates → join tok(id_a) → join tok(id_b)
-      val cand = MinHashLSH.candidatePairsRaw(docs, "doc_id", "text",
-        k = 8, bands = 4, maxBucket = 200, blockCols = Seq("lang"))
+      val cand = MinHashLSH.candidatePairs(docs, "doc_id", "text",
+        k = 8, bands = 4, maxBucket = 200, blockCols = Seq("lang"))._1
       val tok = docs.select(col("doc_id"), Dedup.tokenIds(col("text")).as("tok"))
       cand
         .join(tok.select(col("doc_id").as("id_a"), col("tok").as("tok_a")), "id_a")

@@ -19,7 +19,7 @@ class MinHashLSHSpec extends SparkSpec {
     val base = docs.limit(5)
     val twin = base.withColumn("doc_id", col("doc_id") + 100000)
     val cand = MinHashLSH.candidatePairs(base.union(twin), "doc_id", "text",
-      k = 8, bands = 4)
+      k = 8, bands = 4)._1.distinct()
     // each doc must pair with its identical twin (jaccard 1 ⇒ all bands equal)
     assert(cand.filter(col("id_b") === col("id_a") + 100000).count() == 5)
   }
@@ -32,7 +32,7 @@ class MinHashLSHSpec extends SparkSpec {
       .filter(col("j") >= 0.8)
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
     val cand = MinHashLSH.candidatePairs(docs, "doc_id", "text",
-      k = 8, bands = 8, maxBucket = 10000)
+      k = 8, bands = 8, maxBucket = 10000)._1.distinct()
     val nTruth = truth.count()
     val covered = truth.join(cand, Seq("id_a", "id_b"), "left_semi").count()
     assert(nTruth > 1000, s"ground truth unexpectedly small: $nTruth")
@@ -51,7 +51,7 @@ class MinHashLSHSpec extends SparkSpec {
     val allPairs = 200L * 199 / 2
     val withinGroup = 10L * (20L * 19 / 2)
     val cand = MinHashLSH.candidatePairs(diverse, "doc_id", "text",
-      k = 8, bands = 4).count()
+      k = 8, bands = 4)._1.distinct().count()
     assert(cand <= withinGroup, s"cand=$cand crossed group boundaries")
     assert(cand < allPairs / 10, s"cand=$cand allPairs=$allPairs")
   }
@@ -70,8 +70,8 @@ class MinHashLSHSpec extends SparkSpec {
     val corpus = (hot ++ diverse).toDF("doc_id", "text")
     val cap = 50
     val bands = 4
-    val cand = MinHashLSH.candidatePairsRaw(corpus, "doc_id", "text",
-      k = 8, bands = bands, maxBucket = cap)
+    val cand = MinHashLSH.candidatePairs(corpus, "doc_id", "text",
+      k = 8, bands = bands, maxBucket = cap)._1
     // the hot docs' buckets (size 400 > cap) are dropped in every band ⇒
     // zero pairs among hot ids — the m²/2 blowup never happens
     assert(cand.filter(col("id_a") < 1000L && col("id_b") < 1000L).count() == 0)
@@ -86,10 +86,34 @@ class MinHashLSHSpec extends SparkSpec {
   test("fixture corpus note: shared 31-term vocab makes most pairs collide — " +
     "maxBucket guard caps the blowup") {
     val capped = MinHashLSH.candidatePairs(docs, "doc_id", "text",
-      k = 8, bands = 4, maxBucket = 50).count()
+      k = 8, bands = 4, maxBucket = 50)._1.distinct().count()
     val uncapped = MinHashLSH.candidatePairs(docs, "doc_id", "text",
-      k = 8, bands = 4, maxBucket = 100000).count()
+      k = 8, bands = 4, maxBucket = 100000)._1.distinct().count()
     assert(capped < uncapped)
+  }
+
+  test("bucket cap boundary: a band of exactly maxBucket docs keeps its " +
+    "pairs, maxBucket + 1 docs yield none — MinHash and SimHash alike") {
+    import spark.implicits._
+    // both tiers cap through the one MinHashLSH.bandPairs; the oracle's
+    // QUALIFY keeps a bucket iff its count ≤ cap. Identical texts share
+    // every band, so group `at` fills each of its buckets to exactly the
+    // cap and group `over` to one past it (disjoint vocabularies)
+    val cap = 5
+    val at = (0 until cap).map(i => (i.toLong, "alpha beta gamma delta"))
+    val over = (0 to cap).map(i => (100L + i, "omega sigma kappa lambda"))
+    val docs = (at ++ over).toDF("doc_id", "text")
+    val atPairs = (for (a <- 0 until cap; b <- a + 1 until cap)
+      yield (a.toLong, b.toLong)).toSet
+    def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("id_a", "id_b").distinct().collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val minhash = pairSet(MinHashLSH.candidatePairs(docs, "doc_id", "text",
+      k = 8, bands = 4, maxBucket = cap)._1)
+    val simhash = pairSet(SimHash.nearDupPairs(docs, "doc_id", "text",
+      maxBucket = cap))
+    assert(minhash == atPairs, s"MinHash: $minhash")
+    assert(simhash == atPairs, s"SimHash: $simhash")
   }
 
   test("MinHashBands expression is byte-identical to the Column formulation") {

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.{SparkSpec, Tables}
+import graft.expressions.SimHash60
 import org.apache.spark.sql.functions._
 
 class SimHashSpec extends SparkSpec {
@@ -11,10 +12,13 @@ class SimHashSpec extends SparkSpec {
       (1L, "scan filter join window sort"),
       (2L, "scan filter join window sort"),
       (3L, "completely different words entirely here")).toDF("id", "text")
-    val fp = SimHash.withSimhash(df, "text").select("id", "simhash")
+    val fp = df.select(col("id"), SimHash60.simhash60(col("text")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fp(1L) == fp(2L))
     assert(fp(1L) != fp(3L))
+    val pairs = SimHash.nearDupPairs(df, "id", "text", maxDist = 0)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(pairs.toSeq == Seq((1L, 2L, 0L)), pairs.mkString(","))
   }
 
   test("hamming distance is symmetric and zero on self") {
@@ -24,16 +28,6 @@ class SimHashSpec extends SparkSpec {
       SimHash.hamming(col("b"), col("a")).as("ba")).collect()
     assert(got(0).getInt(0) == 8 && got(0).getInt(0) == got(0).getInt(1))
     assert(got(1).getInt(0) == 0)
-  }
-
-  test("band16 decomposes the fingerprint") {
-    val df = Seq(Tuple1(0x1234_5678_9ABC_DEF0L)).toDF("fp")
-    val bands = df.select(
-      SimHash.band16(col("fp"), 0).as("b0"), SimHash.band16(col("fp"), 1).as("b1"),
-      SimHash.band16(col("fp"), 2).as("b2"), SimHash.band16(col("fp"), 3).as("b3"))
-      .collect().head
-    assert(bands.getLong(0) == 0xDEF0L && bands.getLong(1) == 0x9ABCL &&
-      bands.getLong(2) == 0x5678L && bands.getLong(3) == 0x1234L)
   }
 
   test("near-dup pairs find exact twins (dist 0) and nothing above maxDist") {

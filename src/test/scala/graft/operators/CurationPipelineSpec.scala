@@ -34,7 +34,7 @@ class CurationPipelineSpec extends SparkSpec {
     // stats must agree with independently recomputed per-stage counts
     val gated = CurationPipeline.qualityGate(docs, cfg)
     val exact = CurationPipeline.exactDedup(gated, cfg)
-    val near = CurationPipeline.nearDedup(exact, cfg)
+    val near = CurationPipeline.nearDedup(exact, cfg)._1
     assert(r.stats("after_quality") == gated.count())
     assert(r.stats("after_exact_dedup") == exact.count())
     assert(r.stats("after_near_dedup") == near.count())

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
 class IncrementalClustersSpec extends SparkSpec {
 
   private def pairs(docs: DataFrame): DataFrame =
-    MinHashLSH.candidatePairsRaw(docs, "doc_id", "text",
-      k = 8, bands = 4, maxBucket = 200)
+    MinHashLSH.candidatePairs(docs, "doc_id", "text",
+      k = 8, bands = 4, maxBucket = 200)._1
       .select(col("id_a"), col("id_b")).distinct()
 
   private def assignMap(df: DataFrame): Map[Long, Long] =

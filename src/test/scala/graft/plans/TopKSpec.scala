@@ -103,6 +103,26 @@ class TopKSpec extends SparkSpec {
     }
   }
 
+  test("flush cap conf: a non-integer or a value below 1 fails naming the key") {
+    // the error may surface wrapped by query execution; the cause chain
+    // must carry an IllegalArgumentException that names the conf key
+    def failure(cap: String): IllegalArgumentException = {
+      spark.conf.set("graft.topk.partialFlushKeys", cap)
+      try {
+        val e = intercept[Exception](topkForm(3).collect())
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case iae: IllegalArgumentException => iae }
+          .getOrElse(fail(s"cap=$cap raised no IllegalArgumentException", e))
+      } finally spark.conf.unset("graft.topk.partialFlushKeys")
+    }
+    Seq("lots" -> "must be an integer", "0" -> "at least 1",
+      "-5" -> "at least 1").foreach { case (cap, why) =>
+      val msg = failure(cap).getMessage
+      assert(msg.contains("graft.topk.partialFlushKeys") && msg.contains(why),
+        s"cap=$cap: $msg")
+    }
+  }
+
   test("works grouped by a string key with asc ordering") {
     val got = TopK.perKey(graft.Tables.documents(spark, sfDir),
       Seq("lang"), Seq(col("n_chars").asc, col("doc_id").asc), 2)

@@ -558,7 +558,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming LSH candidates == batch candidatePairsRaw (no overflow), " +
+  test("streaming LSH candidates == batch candidatePairs (no overflow), " +
     "batch-split-invariant; overflowing buckets go dead") {
     import graft.functions.MinHashLSH
     implicit val sqlCtx = spark.sqlContext
@@ -570,9 +570,9 @@ class StreamingSpec extends SparkSpec {
       LangDoc2(11L, "filter pushdown reaches the parquet row group index")) ++
       (20L until 40L).map(i => LangDoc2(i,
         s"unique document number $i with content token${i}a token${i}b"))
-    val batch = MinHashLSH.candidatePairsRaw(
+    val batch = MinHashLSH.candidatePairs(
         docs.toDF("doc_id", "text"), "doc_id", "text",
-        k = 8, bands = 4, maxBucket = 200)
+        k = 8, bands = 4, maxBucket = 200)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def runChunks(chunks: Seq[Seq[LangDoc2]], name: String): Set[(Long, Long)] = {
       val mem = MemoryStream[LangDoc2]
